@@ -18,9 +18,6 @@ WGS84_F = 1.0 / 298.257223563
 WGS84_E2 = WGS84_F * (2.0 - WGS84_F)
 WGS84_E = np.sqrt(WGS84_E2)
 
-STORAGE_CRS = "EPSG:4326"
-METRIC_CRS = "EPSG:3395"
-
 
 def lonlat_to_mercator(lon, lat):
     """EPSG:4326 → EPSG:3395 (ellipsoidal World Mercator), vectorized.

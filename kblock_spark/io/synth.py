@@ -272,7 +272,3 @@ def synth_pages_spark(spark, n_pages: int, partitions: int | None = None):
 
     return rng_df.mapInPandas(gen, schema=PAGES_SCHEMA)
 
-
-def synth_pages_pdf(n_pages: int) -> pd.DataFrame:
-    """Driver-side small-scale variant for unit tests."""
-    return _make_pages_pdf(np.arange(n_pages, dtype=np.int64))

@@ -54,12 +54,6 @@ def with_geocode(df, text_col: str = "text"):
     )
 
 
-@pandas_udf(LongType())
-def cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    """lon/lat → grid cell id (H3-level-9-like tile)."""
-    return pd.Series(cell_of(lon.to_numpy(), lat.to_numpy(), DEFAULT_CELL_DEG))
-
-
 def make_cell_udf(cell_deg: float):
     @pandas_udf(LongType())
     def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:

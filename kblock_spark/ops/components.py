@@ -17,15 +17,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# propagation rounds before giving up; with pointer jumping the
+# round count is O(log diameter) — 2-16 on the suite's near-dup graphs
+MAX_ROUNDS = 25
+
+
+class ComponentsNotConverged(RuntimeError):
+    """Labels still changed in the last allowed round."""
+
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
+    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b"
 ) -> DataFrame:
     """→ (id, component) where component = min id reachable from id
-    (including itself). Vertices are everything mentioned in edges."""
+    (including itself). Vertices are everything mentioned in edges.
+    Raises ComponentsNotConverged after MAX_ROUNDS rounds that still
+    change a label."""
     e = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     )
@@ -60,7 +67,7 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     prev_sum = None
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         # (1) min label over N(u) ∪ {u} (hash-to-min; the self-loop
         # carries u's current label, so no separate keep-own-label join)
         stepped = (
@@ -93,15 +100,21 @@ def connected_components(
         # an unchanged SUM ⟺ no label changed — one tiny aggregate
         # replaces the old per-round jumped⨝labels compare join.
         # decimal(38,0) keeps the sum exact for 64-bit id spaces
-        # (a long sum would hit ANSI overflow at hash-id scale)
+        # (a long sum would hit ANSI overflow at hash-id scale); the
+        # empty graph sums to NULL, coalesced so it converges too
         cur_sum = jumped.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
+            F.coalesce(
+                F.sum(F.col("component").cast("decimal(38,0)")),
+                F.lit(0).cast("decimal(38,0)"),
+            ).alias("s")
         ).first()["s"]
         labels = jumped
         if prev_sum is not None and cur_sum == prev_sum:
-            break
+            return labels
         prev_sum = cur_sum
-    return labels
+    raise ComponentsNotConverged(
+        f"labels still changing after {MAX_ROUNDS} rounds"
+    )
 
 
 def dup_clusters(

@@ -27,22 +27,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import DoubleType
 
 from ..geo.geom import box_polygon_overlap_area, unpack_rings
-from ..geo.tiling import DEFAULT_CELL_DEG, cells_covering_bbox
+from ..geo.tiling import DEFAULT_CELL_DEG
 from .spatial_join import polygon_side_fits_broadcast, polygons_with_cells
-
-
-def make_box_cells_udf(cell_deg: float = DEFAULT_CELL_DEG):
-    @pandas_udf(ArrayType(LongType()))
-    def box_cells(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        out = []
-        for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax):
-            out.append(cells_covering_bbox(x0, y0, x1, y1, cell_deg).tolist())
-        return pd.Series(out)
-
-    return box_cells
 
 
 def _cell_expr(lon, lat, cell_deg: float) -> F.Column:

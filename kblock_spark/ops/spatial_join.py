@@ -109,7 +109,7 @@ def polygon_side_fits_broadcast(polys: DataFrame) -> bool:
     )
 
 
-def suggest_pip_cell_deg(polys: DataFrame, fraction: float = 0.18) -> float:
+def suggest_pip_cell_deg(polys: DataFrame) -> float:
     """Data-derived tile size for the PIP cell join: a fixed grid
     mis-sizes one way or the other (cells ≫ polygon → every point
     carries several candidate polygons through the refine kernel;
@@ -138,7 +138,7 @@ def suggest_pip_cell_deg(polys: DataFrame, fraction: float = 0.18) -> float:
     ).collect()[0]["m"]
     if med is None or med <= 0:
         return DEFAULT_CELL_DEG
-    return float(min(max(med * fraction, 1e-5), 1.0))
+    return float(min(max(med * 0.18, 1e-5), 1.0))
 
 
 def assign_points_to_polygons(

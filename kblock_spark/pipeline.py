@@ -16,11 +16,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from .geo.geom import sample_polyline
+from .geo.geom import sample_polyline, unpack_rings
 from .geo.tiling import DEFAULT_CELL_DEG, cell_of, expand_cells
 from .io.synth import synth_admin, synth_pages_spark, synth_streets
 from .kernels.blocks import delineate_blocks
-from .kernels.complexity import K_SCHEMA
+from .kernels.complexity import (
+    K_COLUMNS,
+    K_SCHEMA,
+    LAYERS_SCHEMA,
+    compute_k_block,
+)
 from .kernels.extract import geocoded_points
 from .ops.spatial_join import assign_points_to_polygons, make_covering_cells_udf
 
@@ -146,10 +151,40 @@ def _pack_blocks(
     return packed.join(tok, "block_id").repartition(nparts, "__part_token")
 
 
-def _unpack_streets(street_lines) -> list[np.ndarray]:
-    if street_lines is None:
-        return []
-    return [np.asarray(c, dtype=np.float64).reshape(-1, 2) for c in street_lines]
+def _unpacked_blocks(pdf: pd.DataFrame):
+    """Packed block rows of one Arrow batch → (block_id, shell, holes,
+    pts, urls, lines) per block, the one unpack both kernel drivers
+    share. Points come in canonical lexsort order: collect_list order
+    depends on the upstream join/dedupe plan, and the kernel's float
+    sums (centroid, layer peel seeds) are association-order sensitive —
+    sorting makes every join strategy (broadcast / salted shuffle /
+    local dedupe) bit-identical. ``urls`` is None unless the blocks
+    were packed ``with_urls``, else permuted alongside their points.
+    Zero-building blocks come through with an empty (0, 2) ``pts``."""
+    urls_col = pdf["b_urls"] if "b_urls" in pdf else [None] * len(pdf)
+    for block_id, sizes, coords, b_lons, b_lats, urls, street_lines in zip(
+        pdf["block_id"], pdf["ring_sizes"], pdf["coords"],
+        pdf["b_lons"], pdf["b_lats"], urls_col, pdf["street_lines"],
+    ):
+        shell, holes = unpack_rings(sizes, coords)
+        if b_lons is None or len(b_lons) == 0:
+            pts = np.zeros((0, 2))
+        else:
+            pts = np.stack(
+                [
+                    np.asarray(b_lons, dtype=np.float64),
+                    np.asarray(b_lats, dtype=np.float64),
+                ],
+                axis=1,
+            )
+        order = np.lexsort((pts[:, 1], pts[:, 0]))
+        pts = pts[order]
+        if urls is not None:
+            urls = np.asarray(urls, dtype=object)[order]
+        lines = [] if street_lines is None else [
+            np.asarray(c, dtype=np.float64).reshape(-1, 2) for c in street_lines
+        ]
+        yield block_id, shell, holes, pts, urls, lines
 
 
 def _packed_k_iter(batches):
@@ -158,57 +193,14 @@ def _packed_k_iter(batches):
     building_count=0 — the reference computes k only for blocks with
     buildings, batch_4:466-506, and fills the rest in the combine
     stage; here the n=0 path also yields their true street lengths)."""
-    import os
-    import time
-
-    from .kernels.complexity import K_COLUMNS, compute_k_block
-    from .geo.geom import unpack_rings
-
-    mdir = os.environ.get("KBLOCK_KERNEL_METRICS")
     for pdf in batches:
         rows = []
-        for block_id, sizes, coords, b_lons, b_lats, street_lines in zip(
-            pdf["block_id"], pdf["ring_sizes"], pdf["coords"],
-            pdf["b_lons"], pdf["b_lats"], pdf["street_lines"],
-        ):
-            t0 = time.time()
-            shell, holes = unpack_rings(sizes, coords)
-            pts = (
-                np.stack(
-                    [
-                        np.asarray(b_lons, dtype=np.float64),
-                        np.asarray(b_lats, dtype=np.float64),
-                    ],
-                    axis=1,
-                )
-                if b_lons is not None and len(b_lons)
-                else np.zeros((0, 2))
-            )
-            # canonical point order: collect_list order depends on the
-            # upstream join/dedupe plan, and the kernel's float sums
-            # (centroid, layer peel seeds) are association-order
-            # sensitive — lexsort makes every join strategy
-            # (broadcast / salted shuffle / local dedupe) bit-identical
-            pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
-            lines = _unpack_streets(street_lines)
+        for block_id, shell, holes, pts, _, lines in _unpacked_blocks(pdf):
             row = compute_k_block(shell, holes, pts, lines)
             row["block_id"] = block_id
             rows.append(row)
-            if mdir:
-                os.makedirs(mdir, exist_ok=True)
-                with open(f"{mdir}/{os.getpid()}.csv", "a") as f:
-                    f.write(
-                        f"{block_id},{len(pts)},{len(lines)},"
-                        f"{int((time.time() - t0) * 1000)}\n"
-                    )
         if rows:
-            yield pd.DataFrame(rows)[
-                [
-                    "block_id", "on_network_street_length",
-                    "off_network_street_length", "nearest_external_street",
-                    "building_count", "building_layers", "k_complexity",
-                ]
-            ]
+            yield pd.DataFrame(rows)[K_COLUMNS]
 
 
 def compute_k(
@@ -236,37 +228,19 @@ def compute_k(
 
 
 def _packed_layers_iter(batches):
-    from .kernels.complexity import compute_k_block
-    from .geo.geom import unpack_rings
-
+    """mapInPandas kernel: one packed block row → one row per building
+    with its layer; zero-building blocks emit nothing."""
     for pdf in batches:
         outs = []
-        for block_id, sizes, coords, b_lons, b_lats, urls, street_lines in zip(
-            pdf["block_id"], pdf["ring_sizes"], pdf["coords"],
-            pdf["b_lons"], pdf["b_lats"], pdf["b_urls"], pdf["street_lines"],
-        ):
-            if b_lons is None or len(b_lons) == 0:
+        for block_id, shell, holes, pts, urls, lines in _unpacked_blocks(pdf):
+            if len(pts) == 0:
                 continue
-            shell, holes = unpack_rings(sizes, coords)
-            pts = np.stack(
-                [
-                    np.asarray(b_lons, dtype=np.float64),
-                    np.asarray(b_lats, dtype=np.float64),
-                ],
-                axis=1,
-            )
-            # same canonical order as _packed_k_iter, with urls
-            # permuted alongside their points
-            order = np.lexsort((pts[:, 1], pts[:, 0]))
-            pts = pts[order]
-            urls = np.asarray(urls, dtype=object)[order]
-            lines = _unpack_streets(street_lines)
             row = compute_k_block(shell, holes, pts, lines)
             outs.append(
                 pd.DataFrame(
                     {
                         "block_id": block_id,
-                        "url": np.asarray(urls, dtype=object),
+                        "url": urls,
                         "layer": row["layer_assignment"].astype(np.int32),
                         "k_complexity": np.int32(row["k_complexity"]),
                     }
@@ -285,8 +259,6 @@ def compute_layers(
 ) -> DataFrame:
     """Per-building concentric-layer membership (K2,
     batch_4:190-375): (block_id, url, layer, k_complexity)."""
-    from .kernels.complexity import LAYERS_SCHEMA
-
     spark = blocks.sparkSession
     # same 2×-cores packing as compute_k (see the A/B note there)
     nparts = nparts or spark.sparkContext.defaultParallelism * 2
@@ -365,13 +337,12 @@ def run_pipeline(
     cell_deg: float | None = None,
     broadcast_polys: bool = True,
     salt_buckets: int = 0,
-    cache_intermediate: bool = True,
 ):
     """Build the full DAG on synthetic inputs; returns dict of
     DataFrames.
 
-    blocks/buildings feed multiple downstream branches (kernel
-    cogroup, empty-block anti-join, street assignment) — cache them so
+    blocks/buildings feed multiple downstream branches (k-kernel
+    packing, empty-block anti-join, street assignment) — cache them so
     delineation and the PIP join run once (the reference likewise
     materializes each stage to parquet between batches).
 
@@ -382,9 +353,7 @@ def run_pipeline(
 
     admin = spark.createDataFrame(synth_admin(nx, ny))
     streets = spark.createDataFrame(synth_streets(nx, ny, grid))
-    blocks = delineate_blocks(admin, streets)
-    if cache_intermediate:
-        blocks = blocks.cache()
+    blocks = delineate_blocks(admin, streets).cache()
     if cell_deg is None:
         cell_deg = suggest_pip_cell_deg(blocks)
     pages = synth_pages_spark(spark, n_pages)
@@ -398,9 +367,7 @@ def run_pipeline(
         cell_deg=cell_deg,
         salt_buckets=salt_buckets,
         broadcast_polys=broadcast_polys,
-    )
-    if cache_intermediate:
-        assigned = assigned.cache()
+    ).cache()
     complexity = compute_k(blocks, assigned, streets, cell_deg)
     return {
         "admin": admin,

@@ -59,32 +59,6 @@ def _dec(c) -> F.Column:
     return col.cast("decimal(18,2)")
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _stream_shuffle(spark: SparkSession, n: int = 8):
-    """Pin the state-partition count for a streaming query's
-    lifetime. Structured Streaming bakes spark.sql.shuffle.partitions
-    into the checkpoint at the first batch — it is a PER-STREAM
-    property, not a session one — and every stateful operator pays
-    per-partition-per-store fixed costs (store open/commit/snapshot)
-    each micro-batch: a stream-stream join holds 4 stores per
-    partition, so the session's batch-tuned 32 means 128 store
-    commits per batch against a few thousand keys (measured 10-17 s
-    vs 3.5 s at 8 for s07). A cluster run against a 10^9 keyspace
-    sets a large count the same way — per stream, sized to keyed
-    state, then immutable for the checkpoint's life. Restores the
-    session conf after termination (safe: availableNow streams are
-    awaited inside the scope)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def _h12(col) -> F.Column:
     """md5-prefix bigint hash, identical to DuckDB
     ('0x'||substr(md5(x),1,12))::BIGINT."""
@@ -1143,7 +1117,8 @@ def _trigram_zip(toks):
     ).otherwise(F.array().cast("array<struct<a:string,b:string,c:string>>"))
 
 
-def _zip_shingle_str(z) -> F.Column:
+def _zip_shingle_str(z: str) -> F.Column:
+    """Space-joined a/b/c fields of the struct column named ``z``."""
     return F.concat_ws(
         " ", F.col(f"{z}.a"), F.col(f"{z}.b"), F.col(f"{z}.c")
     )
@@ -4455,11 +4430,7 @@ def s01_stream_tile_rollup(spark, sf_dir):
     import numpy as np
 
     from .io.synth import _make_pages_pdf
-    from .streaming import (
-        read_pages_stream,
-        run_stream_to_parquet,
-        stream_tile_rollup,
-    )
+    from .streaming import drain, read_pages_stream, stream_tile_rollup
 
     base = _scratch("kblock_stream_")
     src, out, ck = f"{base}/src", f"{base}/out", f"{base}/ck"
@@ -4469,7 +4440,7 @@ def s01_stream_tile_rollup(spark, sf_dir):
     rollup = stream_tile_rollup(
         read_pages_stream(spark, src), window="1 minute", watermark="2 minutes"
     )
-    run_stream_to_parquet(rollup, out, ck, available_now=True)
+    drain(rollup, out, ck)
     return spark.read.parquet(out).select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "cell", "n_pages", "n_langs",
@@ -4499,17 +4470,9 @@ def s02_stream_dedup(spark, sf_dir):
     stream = spark.readStream.schema("doc_id long, text string, fp long").parquet(src)
     kept = stream_dedup_stateful(stream)
 
-    from .streaming.ingest import idempotent_parquet_sink
+    from .streaming.ingest import drain, idempotent_parquet_sink
 
-    with _stream_shuffle(spark):
-        q = (
-            kept.writeStream.outputMode("update")
-            .foreachBatch(idempotent_parquet_sink(out))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(kept, idempotent_parquet_sink(out), ck, output_mode="update")
     return spark.read.parquet(out).select("fp", "doc_id", "n_dups")
 
 
@@ -4536,7 +4499,7 @@ FROM fps GROUP BY fp
 # q21's lag-based formulation uses > and is a different query.
 
 def s03_stream_session_windows(spark, sf_dir):
-    from .streaming.ingest import idempotent_parquet_sink
+    from .streaming.ingest import drain, idempotent_parquet_sink
 
     e = _t(spark, sf_dir, "events").select("user_id", "ts")
     base = _scratch("kblock_s03_")
@@ -4560,15 +4523,7 @@ def s03_stream_session_windows(spark, sf_dir):
             "n_events",
         )
     )
-    with _stream_shuffle(spark):
-        q = (
-            sess.writeStream.outputMode("append")
-            .foreachBatch(idempotent_parquet_sink(out))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(sess, idempotent_parquet_sink(out), ck)
     return spark.read.parquet(out).select("user_id", "session_start", "n_events")
 
 
@@ -4602,7 +4557,7 @@ FROM sess GROUP BY user_id, sid
 # any micro-batch/partition order.
 
 def s04_stream_tumbling_rollup(spark, sf_dir):
-    from .streaming.ingest import idempotent_parquet_sink
+    from .streaming.ingest import drain, idempotent_parquet_sink
 
     e = _t(spark, sf_dir, "events").select("event_type", "ts", "user_id", "value")
     base = _scratch("kblock_s04_")
@@ -4641,15 +4596,7 @@ def s04_stream_tumbling_rollup(spark, sf_dir):
             F.col("n_users").cast("bigint").alias("n_users"),
         )
     )
-    with _stream_shuffle(spark):
-        q = (
-            roll.writeStream.outputMode("append")
-            .foreachBatch(idempotent_parquet_sink(out))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(roll, idempotent_parquet_sink(out), ck)
     return spark.read.parquet(out).select(
         "window_start", "event_type", "n_events", "value_e6", "n_users"
     )
@@ -4679,7 +4626,7 @@ GROUP BY 1, 2
 # time regardless).
 
 def s05_stream_static_enrich(spark, sf_dir):
-    from .streaming.ingest import idempotent_parquet_sink
+    from .streaming.ingest import drain, idempotent_parquet_sink
 
     e = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
     nat = _t(spark, sf_dir, "nation").select(
@@ -4714,15 +4661,7 @@ def s05_stream_static_enrich(spark, sf_dir):
             "value_e6",
         )
     )
-    with _stream_shuffle(spark):
-        q = (
-            roll.writeStream.outputMode("append")
-            .foreachBatch(idempotent_parquet_sink(out))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(roll, idempotent_parquet_sink(out), ck)
     return spark.read.parquet(out).select("day", "n_name", "n_events", "value_e6")
 
 
@@ -4752,7 +4691,7 @@ GROUP BY 1, 2
 # D16_SQL verbatim — the stream must equal the batch exactly.
 
 def s06_stream_decontamination(spark, sf_dir):
-    from .streaming.ingest import idempotent_parquet_sink
+    from .streaming.ingest import drain, idempotent_parquet_sink
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     base = _scratch("kblock_s06_")
@@ -4776,15 +4715,7 @@ def s06_stream_decontamination(spark, sf_dir):
             "n_contaminated"
         ),
     )
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(idempotent_parquet_sink(out))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, idempotent_parquet_sink(out), ck, output_mode="update")
     r = spark.read.parquet(out)
     return r.where(F.col("n_contaminated") > 0).select(
         "doc_id",
@@ -4812,7 +4743,7 @@ def s06_stream_decontamination(spark, sf_dir):
 # interval join in DuckDB.
 
 def s07_stream_stream_join(spark, sf_dir):
-    from .streaming.ingest import idempotent_parquet_sink
+    from .streaming.ingest import drain, idempotent_parquet_sink
 
     e = _t(spark, sf_dir, "events").select("event_type", "ts", "user_id", "value")
     base = _scratch("kblock_s07_")
@@ -4852,16 +4783,9 @@ def s07_stream_stream_join(spark, sf_dir):
     # a stream-stream join holds 4 state stores PER partition and the
     # join state here is a few hundred rows: 4 partitions halves the
     # per-batch store-commit count vs 8 (measured 3.2→2.5 s; state
-    # sizing is per-stream, by keyed-state volume — see _stream_shuffle)
-    with _stream_shuffle(spark, 4):
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(idempotent_parquet_sink(out))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # sizing is per-stream, by keyed-state volume — see
+    # streaming.ingest.pinned_state_partitions)
+    drain(joined, idempotent_parquet_sink(out), ck, state_partitions=4)
     return spark.read.parquet(out).select(
         "user_id", "purchase_ts", "click_ts", "p_value_e6"
     )
@@ -4906,6 +4830,7 @@ def s08_stream_hll_merge(spark, sf_dir):
         read_snapshot,
     )
     from .ops.sketch import hll_estimate, hll_merge, hll_registers
+    from .streaming.ingest import drain
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     base = _scratch("kblock_s08_")
@@ -4923,18 +4848,12 @@ def s08_stream_hll_merge(spark, sf_dir):
             )
         overwrite_snapshot(regs, tbl)
 
-    with _stream_shuffle(spark):
-        q = (
-            spark.readStream.schema("doc_id long, text string, lang string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.outputMode("append")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = (
+        spark.readStream.schema("doc_id long, text string, lang string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    drain(stream, merge_batch, ck)
     est = hll_estimate(read_snapshot(spark, tbl), ["lang"], p=6)
     exact = (
         d.select("lang", F.explode(F.split("text", " ")).alias("token"))
@@ -4963,7 +4882,7 @@ def s08_stream_hll_merge(spark, sf_dir):
 
 def s09_stream_corpus_pipeline(spark, sf_dir):
     from .streaming.dedup import stream_dedup_keep_row
-    from .streaming.ingest import idempotent_parquet_sink
+    from .streaming.ingest import drain, idempotent_parquet_sink
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "n_chars"
@@ -4992,15 +4911,7 @@ def s09_stream_corpus_pipeline(spark, sf_dir):
         .alias("split"),
     )
     kept = stream_dedup_keep_row(q, "lang string, n_toks long, split string")
-    with _stream_shuffle(spark):
-        sq = (
-            kept.writeStream.outputMode("update")
-            .foreachBatch(idempotent_parquet_sink(out))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
+    drain(kept, idempotent_parquet_sink(out), ck, output_mode="update")
     return (
         spark.read.parquet(out)
         .groupBy("lang", "split")
@@ -5083,6 +4994,7 @@ def _upsert_crawl_table(spark, sf_dir):
     import time as _time
 
     from .io.tableformat import streaming_upsert_sink
+    from .streaming.ingest import drain
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     base = _scratch("kblock_supsert_")
@@ -5124,15 +5036,11 @@ def _upsert_crawl_table(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(streaming_upsert_sink(tbl, "doc_id", stat_cols=["doc_id"]))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        stream,
+        streaming_upsert_sink(tbl, "doc_id", stat_cols=["doc_id"]),
+        ck,
+    )
     return tbl
 
 
@@ -5185,6 +5093,7 @@ def s15_stream_upsert_branch(spark, sf_dir):
         read_snapshot,
         streaming_upsert_sink,
     )
+    from .streaming.ingest import drain
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     base = _scratch("kblock_s15_")
@@ -5223,19 +5132,11 @@ def s15_stream_upsert_branch(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(
-                streaming_upsert_sink(
-                    tbl, "doc_id", stat_cols=["doc_id"], ref="audit"
-                )
-            )
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        stream,
+        streaming_upsert_sink(tbl, "doc_id", stat_cols=["doc_id"], ref="audit"),
+        ck,
+    )
     cols = ["doc_id", "lang", F.col("n_chars").cast("bigint").alias("n_chars")]
     pre = read_snapshot(spark, tbl).select(*cols)
     pre_rows = pre.withColumn("stage", F.lit("pre"))
@@ -5279,6 +5180,7 @@ def s11_stream_table_source(spark, sf_dir):
         delete_where_mor,
         merge_into_mor,
     )
+    from .streaming.ingest import drain
 
     register_table_source(spark)
     docs = _t(spark, sf_dir, "documents").select(
@@ -5300,15 +5202,7 @@ def s11_stream_table_source(spark, sf_dir):
     )
     merge_into_mor(spark, t, upd, "doc_id")
     stream = spark.readStream.format("kblock_table").option("path", t).load()
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(stream, out, ck)
     return spark.read.parquet(out).select(
         "doc_id", "lang", "source",
         F.col("n_chars").cast("bigint").alias("n_chars"),
@@ -5481,6 +5375,7 @@ def s13_stream_paced_drain(spark, sf_dir):
 
     from .io.table_source import register_table_source
     from .io.tableformat import append_snapshots_split
+    from .streaming.ingest import pinned_state_partitions
 
     register_table_source(spark)
     docs = _t(spark, sf_dir, "documents").select(
@@ -5515,7 +5410,7 @@ def s13_stream_paced_drain(spark, sf_dir):
         if rows:
             batch_rows.append(rows)
 
-    with _stream_shuffle(spark):
+    with pinned_state_partitions(spark):
         q = (
             spark.readStream.format("kblock_table")
             .option("path", t)
@@ -5574,7 +5469,7 @@ def s14_stream_outer_join(spark, sf_dir):
     import shutil
     import time as _time
 
-    from .streaming.ingest import idempotent_parquet_sink
+    from .streaming.ingest import drain, idempotent_parquet_sink
 
     e = _t(spark, sf_dir, "events").select(
         "event_type", "ts", "user_id", "value"
@@ -5658,15 +5553,7 @@ def s14_stream_outer_join(spark, sf_dir):
     # join = 4 stores/partition over ~hundreds of keyed rows; measured
     # 8→4: 6.4→5.0 s, 4→2: won all 4 A/B pairs 4.3-4.7 vs 4.8-5.5 s
     # across this query's 5 micro-batches)
-    with _stream_shuffle(spark, 2):
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(idempotent_parquet_sink(out))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(joined, idempotent_parquet_sink(out), ck, state_partitions=2)
     return (
         spark.read.parquet(out)
         .where(F.col("user_id") >= 0)  # batch-side sentinel exclusion
@@ -5701,6 +5588,7 @@ def s12_stream_after_upsert(spark, sf_dir):
     Oracle: S10_SQL verbatim — the proof that stream-read-after-upsert
     equals the batch scan (which S10 oracles against DuckDB)."""
     from .io.table_source import register_table_source
+    from .streaming.ingest import drain
 
     register_table_source(spark)
     tbl = _upsert_crawl_table(spark, sf_dir)
@@ -5712,15 +5600,7 @@ def s12_stream_after_upsert(spark, sf_dir):
         .option("withSnapshotId", "true")
         .load()
     )
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(stream, out, ck)
     feed = spark.read.parquet(out)
     w = Window.partitionBy("doc_id").orderBy(F.col("_snapshot_id").desc())
     return (
@@ -7240,8 +7120,8 @@ def geo_k_oracle(spark, sf_dir):
     from .pipeline import compute_k
 
     blocks, bldgs, streets = _k_oracle_fixture(spark)
-    # 8 fixture blocks: the default nparts (4x parallelism = 128)
-    # would pay 128 empty-task overheads per run
+    # 8 fixture blocks: the default nparts (2x parallelism) would pay
+    # mostly empty-task overheads per run
     k = compute_k(blocks, bldgs.drop("url"), streets, nparts=8)
     return k.select(
         "block_id",

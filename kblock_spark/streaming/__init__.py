@@ -1,7 +1,7 @@
 from .ingest import (  # noqa: F401
+    drain,
     idempotent_parquet_sink,
     read_pages_stream,
     stream_tile_rollup,
-    run_stream_to_parquet,
 )
 from .stateful import running_user_profiles  # noqa: F401

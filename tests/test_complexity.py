@@ -147,3 +147,10 @@ def test_layer_counts_sum_to_building_count():
     total = sum(int(c) for c in r["building_layers"].split(","))
     assert total == 120 == r["building_count"]
     assert r["k_complexity"] >= 1
+
+
+@pytest.mark.parametrize("bad", [np.nan, np.inf])
+def test_non_finite_building_coordinate_is_named(bad):
+    pts = np.vstack([ring_points(40, 3), [[bad, 0.0]]])
+    with pytest.raises(ValueError, match=r"non-finite building coordinate at point 3"):
+        compute_k_block(square_block(100), [], pts, [])

@@ -1,9 +1,15 @@
 """Distributed connected components vs a driver union-find oracle."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from kblock_spark.ops.components import connected_components, dup_clusters
+from kblock_spark.ops import components
+from kblock_spark.ops.components import (
+    ComponentsNotConverged,
+    connected_components,
+    dup_clusters,
+)
 
 
 def _uf_components(edges):
@@ -51,3 +57,18 @@ def test_dup_clusters_keeper_semantics(spark):
     assert rows[7]["keeper_doc_id"] == 2
     n_keepers = sum(1 for r in rows.values() if r["is_keeper"])
     assert n_keepers == 2  # one keeper per component
+
+
+def test_cc_empty_edges_converge(spark):
+    # the empty graph's label sum is NULL every round; it must still
+    # stop at round 2 and return an empty result, not spin to the cap
+    df = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert connected_components(df).collect() == []
+
+
+def test_cc_raises_when_rounds_run_out(spark, monkeypatch):
+    monkeypatch.setattr(components, "MAX_ROUNDS", 1)
+    chain = [(i, i + 1) for i in range(29)]  # 30 vertices
+    df = spark.createDataFrame(chain, "doc_a long, doc_b long")
+    with pytest.raises(ComponentsNotConverged):
+        connected_components(df)

@@ -4,15 +4,13 @@ match the batch computation of that window exactly, and a resumed
 stream must process only new files without re-emitting old windows."""
 
 import numpy as np
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from kblock_spark.io.synth import _make_pages_pdf
 from kblock_spark.kernels.extract import make_cell_udf, with_geocode
-from kblock_spark.streaming import (
-    read_pages_stream,
-    run_stream_to_parquet,
-    stream_tile_rollup,
-)
+from kblock_spark.streaming import drain, read_pages_stream, stream_tile_rollup
 
 WINDOW = "1 minute"
 WATERMARK = "2 minutes"
@@ -40,7 +38,7 @@ def _drain(spark, src, out, ck):
         read_pages_stream(spark, src), cell_deg=0.003,
         window=WINDOW, watermark=WATERMARK,
     )
-    run_stream_to_parquet(rollup, out, ck, available_now=True)
+    drain(rollup, out, ck)
     return spark.read.parquet(out)
 
 
@@ -200,3 +198,52 @@ def test_session_windows_resume_across_drops(spark, tmp_path):
         ).collect()
     }
     assert got == want and len(want) > 10
+
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture
+def session_partitions(spark):
+    """Session shuffle partitions set to 3 (drain pins 8) for the
+    test, then put back."""
+    old = spark.conf.get(SHUFFLE)
+    spark.conf.set(SHUFFLE, "3")
+    yield "3"
+    spark.conf.set(SHUFFLE, old)
+
+
+def _three_batch_stream(spark, src):
+    for i in range(3):
+        spark.range(i * 10, i * 10 + 10).coalesce(1).write.mode("append").parquet(src)
+    return spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(src)
+
+
+def test_drain_pins_state_partitions_and_reports_each_batch(
+    spark, tmp_path, session_partitions
+):
+    stream = _three_batch_stream(spark, str(tmp_path / "src"))
+    seen = []
+
+    def sink(bdf, batch_id):
+        seen.append((batch_id, bdf.sparkSession.conf.get(SHUFFLE), bdf.count()))
+
+    progress = drain(stream, sink, str(tmp_path / "ck"))
+    assert spark.conf.get(SHUFFLE) == session_partitions
+    assert [(b, p) for b, p, _ in seen] == [(0, "8"), (1, "8"), (2, "8")]
+    assert sum(n for _, _, n in seen) == 30
+    assert len(progress) == len(seen)
+    assert [p.batchId for p in progress] == [b for b, _, _ in seen]
+
+
+def test_drain_failure_propagates_and_restores_session(
+    spark, tmp_path, session_partitions
+):
+    stream = _three_batch_stream(spark, str(tmp_path / "src"))
+
+    def sink(bdf, batch_id):
+        raise RuntimeError("sink exploded")
+
+    with pytest.raises(StreamingQueryException, match="sink exploded"):
+        drain(stream, sink, str(tmp_path / "ck"))
+    assert spark.conf.get(SHUFFLE) == session_partitions
