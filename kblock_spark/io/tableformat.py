@@ -18,6 +18,10 @@ only public Iceberg concepts (spec at iceberg.apache.org/spec):
   diff between two snapshots, and predicate pruning = skip files whose
   [min, max] range can't match.
 
+Every write operation commits through :func:`_commit_change`, the one
+builder of snapshot manifests: its docstring lists the manifest fields
+and the rule for what a child snapshot copies from its parent.
+
 Crash safety: a writer that dies after writing data files or its
 manifest but before the ``current`` swap leaves orphans, never a
 corrupt table — readers only follow ``current``. ``expire_snapshots``
@@ -306,6 +310,116 @@ def _commit(
     return sid
 
 
+def _commit_change(
+    path: str,
+    operation: str,
+    parent: int | None = None,
+    *,
+    ref: str = "main",
+    base: dict | None = None,
+    added: list[dict] = (),
+    removed: set[str] = frozenset(),
+    deletes_added: list[dict] = (),
+    replace: bool = False,
+    schema: str | None = None,
+    stat_cols: list[str] | None = None,
+    batch_id: int | None = None,
+    extra: dict | None = None,
+    retries: int | None = None,
+) -> int:
+    """Commit one snapshot = its parent's manifest plus one CHANGE →
+    new snapshot id. The only builder of snapshot manifests; every
+    write operation states its change here and nothing else.
+
+    Manifest fields (:func:`_commit` adds ``snapshot_id``,
+    ``parent_id``, ``ref``, ``ts`` and the ``seq`` stamps):
+
+    - ``operation``: append | overwrite | set-spec | rollback |
+      delete-mor | merge-mor | replace | merge | delete;
+    - ``schema``: ``simpleString`` of the table schema;
+    - ``stat_cols``: columns whose per-file min/max ride the entries;
+    - ``schema_evolved``: the files do not all share ``schema`` —
+      readers merge parquet footers (Iceberg add-column semantics);
+    - ``files``: data-file entries (``path``, ``rows``, ``bytes``,
+      ``min_<c>``/``max_<c>``, ``seq``; ``partition`` + ``spec_id``
+      for files written under a spec);
+    - ``added``: paths of the data files this commit added;
+    - ``delete_files``: position-delete entries (``path``, ``rows``;
+      the file holds ``file_path``/``pos``) and equality-delete
+      entries (also ``kind="eq"``, ``col``, ``seq``);
+    - ``spec`` / ``spec_id``: live partition spec and its id;
+    - ``batch_id``: streaming micro-batch id (exactly-once marker);
+    - per-operation extras (``extra``): ``rollback_of`` (rollback),
+      ``cherry_picked_from`` (publish cherry-pick), ``sort_order``
+      (z-order rewrite), and ``spec`` + ``spec_id`` (set-spec).
+
+    What a child copies from ``base`` (the parent's manifest unless
+    given — a rollback passes its target's):
+
+    - ``files`` minus ``removed`` (relative paths) plus ``added``, and
+      ``delete_files`` plus ``deletes_added``. A ``replace`` (every
+      row rewritten) starts from no files and no delete files.
+    - ``schema`` / ``stat_cols`` unless the change states them.
+      ``schema_evolved`` is the base's, set when a stated schema
+      differs from the base's; a replace written under a stated
+      schema starts unevolved.
+    - ``spec`` and ``spec_id`` when set — a reverted spec keeps its id,
+      so the next :func:`set_partition_spec` never re-issues the id of
+      a file already written.
+    - ``batch_id``: the change's own if given; otherwise every
+      operation but ``append`` and ``overwrite`` re-records the last
+      batch on the parent's chain, so a replayed micro-batch still
+      commits once after a rewrite or an expiry.
+
+    ``retries=None`` pins the commit to ``parent``, the snapshot the
+    change was computed from: a moved head raises
+    :class:`CommitConflict`. An int marks an order-independent change
+    (an append): the parent is ``ref``'s head, re-read for each of
+    ``retries + 1`` attempts (Iceberg's metadata-only re-base)."""
+    for attempt in range(1 + (retries or 0)):
+        if retries is not None:
+            parent = ref_head(path, ref)
+        m = base if base is not None else (
+            read_manifest(path, parent) if parent is not None else {}
+        )
+        if schema is None:
+            schema_s, evolved = m.get("schema"), bool(m.get("schema_evolved"))
+        else:
+            schema_s = schema
+            evolved = not replace and bool(m) and (
+                bool(m.get("schema_evolved")) or m.get("schema") != schema
+            )
+        files = [] if replace else m.get("files", [])
+        dels = [] if replace else m.get("delete_files") or []
+        manifest = {
+            "operation": operation,
+            "schema": schema_s,
+            "stat_cols": (
+                (m.get("stat_cols") or []) if stat_cols is None else stat_cols
+            ),
+            "schema_evolved": evolved,
+            "files": [e for e in files if e["path"] not in removed]
+            + list(added),
+            "added": [e["path"] for e in added],
+            "delete_files": dels + list(deletes_added),
+        }
+        for k in ("spec", "spec_id"):
+            if m.get(k):
+                manifest[k] = m[k]
+        b = batch_id
+        if b is None and operation not in ("append", "overwrite"):
+            b = _last_batch_in_chain(path, parent)
+        if b is not None:
+            manifest["batch_id"] = int(b)
+        manifest.update(extra or {})
+        try:
+            return _commit(path, manifest, parent, ref=ref)
+        except CommitConflict:
+            if attempt == (retries or 0):
+                raise
+    raise AssertionError("unreachable")
+
+
 def _partition_expr(df: DataFrame, spec: list[dict]):
     """Partition-transform columns for a spec. The derived columns are
     COPIES (``__p_<col>``), so ``partitionBy`` strips only the copy and
@@ -355,6 +469,18 @@ def _write_data_files(
         pdf.write.mode("overwrite").partitionBy(*pnames).parquet(sub)
     else:
         df.write.mode("overwrite").parquet(sub)
+    return _data_file_entries(sub, path, stat_cols, spec, spec_id)
+
+
+def _data_file_entries(
+    sub: str,
+    path: str,
+    stat_cols: list[str],
+    spec: list[dict] | None = None,
+    spec_id: int = 0,
+) -> list[dict]:
+    """Manifest entries for the parquet files under ``sub`` (none if
+    it does not exist)."""
     entries = []
     for root, _dirs, names in sorted(os.walk(sub)):
         part: dict = {}
@@ -412,57 +538,20 @@ def append_snapshot(
     ``ref`` commits to a BRANCH head instead of ``current`` — the
     write side of the write-audit-publish pattern
     (:func:`create_branch` / :func:`publish_branch`)."""
-    schema = df.schema.simpleString()
-    parent0 = ref_head(path, ref)
-    spec: list[dict] = []
-    spec_id = 0
-    if parent0 is not None:
-        m0 = read_manifest(path, parent0)
-        if stat_cols is None:
-            stat_cols = m0.get("stat_cols")
-        spec = m0.get("spec") or []
-        spec_id = int(m0.get("spec_id") or 0)
+    head = ref_head(path, ref)
+    m0 = read_manifest(path, head) if head is not None else {}
+    if stat_cols is None:
+        stat_cols = m0.get("stat_cols")
     stat_cols = stat_cols or []
-    new = _write_data_files(df, path, stat_cols, spec=spec, spec_id=spec_id)
-    for attempt in range(commit_retries + 1):
-        parent = ref_head(path, ref)
-        base: list[dict] = []
-        dels: list[dict] = []
-        evolved = False
-        if parent is not None:
-            m = read_manifest(path, parent)
-            base = m["files"]
-            # position deletes survive appends: they address explicit
-            # immutable files, so they can't hit the new rows
-            dels = m.get("delete_files") or []
-            # a schema change (e.g. added column) marks the chain
-            # evolved: readers then merge footers so old files surface
-            # the new columns as NULL (Iceberg add-column semantics)
-            evolved = bool(m.get("schema_evolved")) or m.get("schema") != schema
-        manifest = {
-            "operation": "append",
-            "schema": schema,
-            "stat_cols": stat_cols,
-            "schema_evolved": evolved,
-            "files": base + new,
-            "added": [e["path"] for e in new],
-        }
-        if dels:
-            manifest["delete_files"] = dels
-        if spec:
-            manifest["spec"] = spec
-            manifest["spec_id"] = spec_id
-        elif parent is not None and m.get("spec_id"):
-            # spec was reverted to unpartitioned: keep the id counter
-            manifest["spec_id"] = m["spec_id"]
-        if batch_id is not None:
-            manifest["batch_id"] = int(batch_id)
-        try:
-            return _commit(path, manifest, parent, ref=ref)
-        except CommitConflict:
-            if attempt == commit_retries:
-                raise
-    raise AssertionError("unreachable")
+    new = _write_data_files(
+        df, path, stat_cols,
+        spec=m0.get("spec") or [], spec_id=int(m0.get("spec_id") or 0),
+    )
+    return _commit_change(
+        path, "append", added=new, schema=df.schema.simpleString(),
+        stat_cols=stat_cols, batch_id=batch_id, retries=commit_retries,
+        ref=ref,
+    )
 
 
 def append_snapshots_split(
@@ -485,73 +574,26 @@ def append_snapshots_split(
     Spec-less tables only (the staging layout realizes the split, not
     a table partition spec). Returns the new snapshot ids in order."""
     head = ref_head(path, ref)
-    if head is not None:
-        hm = read_manifest(path, head)
-        if hm.get("spec"):
-            raise ValueError(
-                "append_snapshots_split requires a spec-less table"
-            )
-        if stat_cols is None:
-            stat_cols = hm.get("stat_cols")
+    hm = read_manifest(path, head) if head is not None else {}
+    if hm.get("spec"):
+        raise ValueError("append_snapshots_split requires a spec-less table")
+    if stat_cols is None:
+        stat_cols = hm.get("stat_cols")
     stat_cols = stat_cols or []
     schema = df.drop(split_col).schema.simpleString()
     sub = os.path.join(path, "data", uuid.uuid4().hex)
     df.write.mode("overwrite").partitionBy(split_col).parquet(sub)
-    sids: list[int] = []
-    for v in values:
-        vdir = os.path.join(sub, f"{split_col}={v}")
-        entries = []
-        if os.path.isdir(vdir):
-            for name in sorted(os.listdir(vdir)):
-                if name.endswith(".parquet"):
-                    fpath = os.path.join(vdir, name)
-                    entries.append(
-                        {
-                            "path": os.path.relpath(fpath, path),
-                            **_file_stats(fpath, stat_cols),
-                        }
-                    )
-        for attempt in range(commit_retries + 1):
-            parent = ref_head(path, ref)
-            base: list[dict] = []
-            dels: list[dict] = []
-            evolved = False
-            if parent is not None:
-                m = read_manifest(path, parent)
-                base = m["files"]
-                dels = m.get("delete_files") or []
-                evolved = (
-                    bool(m.get("schema_evolved")) or m.get("schema") != schema
-                )
-            manifest = {
-                "operation": "append",
-                "schema": schema,
-                "stat_cols": stat_cols,
-                "schema_evolved": evolved,
-                "files": base + entries,
-                "added": [e["path"] for e in entries],
-            }
-            if dels:
-                manifest["delete_files"] = dels
-            try:
-                sids.append(_commit(path, manifest, parent, ref=ref))
-                break
-            except CommitConflict:
-                if attempt == commit_retries:
-                    raise
-    return sids
-
-
-def _carry_spec(manifest: dict, m: dict) -> dict:
-    """Copy the partition spec + id from a parent manifest onto a new
-    one (rewrite ops emit unpartitioned files — tagged with no
-    partition tuple, so planning treats them conservatively — but
-    FUTURE appends must keep partitioning by the live spec)."""
-    if m.get("spec"):
-        manifest["spec"] = m["spec"]
-    if m.get("spec_id"):
-        manifest["spec_id"] = m["spec_id"]
-    return manifest
+    return [
+        _commit_change(
+            path, "append",
+            added=_data_file_entries(
+                os.path.join(sub, f"{split_col}={v}"), path, stat_cols
+            ),
+            schema=schema, stat_cols=stat_cols, retries=commit_retries,
+            ref=ref,
+        )
+        for v in values
+    ]
 
 
 def set_partition_spec(path: str, spec: list[dict]) -> int:
@@ -578,23 +620,10 @@ def set_partition_spec(path: str, spec: list[dict]) -> int:
     cur = current_snapshot_id(path)
     if cur is None:
         raise FileNotFoundError(f"no current snapshot in {path}")
-    m = read_manifest(path, cur)
-    manifest = {
-        "operation": "set-spec",
-        "schema": m.get("schema"),
-        "stat_cols": m.get("stat_cols") or [],
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "files": m["files"],
-        "added": [],
-        "spec": list(spec),
-        "spec_id": int(m.get("spec_id") or 0) + 1,
-    }
-    if m.get("delete_files"):
-        manifest["delete_files"] = m["delete_files"]
-    batch = last_committed_batch(path)
-    if batch is not None:
-        manifest["batch_id"] = batch
-    return _commit(path, manifest, cur)
+    spec_id = int(read_manifest(path, cur).get("spec_id") or 0) + 1
+    return _commit_change(
+        path, "set-spec", cur, extra={"spec": list(spec), "spec_id": spec_id}
+    )
 
 
 def _all_refs(path: str) -> list[str]:
@@ -733,32 +762,10 @@ def publish_branch(
             for e in sm["files"]
             if e["path"] in added
         ]
-        for attempt in range(commit_retries + 1):
-            parent = current_snapshot_id(path)
-            pm = read_manifest(path, parent)
-            evolved = (
-                bool(pm.get("schema_evolved"))
-                or bool(sm.get("schema_evolved"))
-                or pm.get("schema") != sm.get("schema")
-            )
-            manifest = {
-                "operation": "append",
-                "cherry_picked_from": s_sid,
-                "schema": sm.get("schema"),
-                "stat_cols": pm.get("stat_cols") or sm.get("stat_cols") or [],
-                "schema_evolved": evolved,
-                "files": pm["files"] + add_entries,
-                "added": sorted(added),
-            }
-            if pm.get("delete_files"):
-                manifest["delete_files"] = pm["delete_files"]
-            _carry_spec(manifest, pm)
-            try:
-                last = _commit(path, manifest, parent)
-                break
-            except CommitConflict:
-                if attempt == commit_retries:
-                    raise
+        last = _commit_change(
+            path, "append", added=add_entries, schema=sm.get("schema"),
+            extra={"cherry_picked_from": s_sid}, retries=commit_retries,
+        )
     if drop:
         drop_branch(path, name)
     return last
@@ -1029,22 +1036,11 @@ def rollback_to(path: str, snapshot_id: int) -> int:
             f"snapshot {snapshot_id} is not a live ancestor of current "
             f"{cur} (never existed, or expired)"
         )
-    t = read_manifest(path, snapshot_id)
     b = _last_batch_in_chain(path, snapshot_id)
-    manifest = {
-        "operation": "rollback",
-        "rollback_of": snapshot_id,
-        "schema": t.get("schema"),
-        "stat_cols": t.get("stat_cols") or [],
-        "schema_evolved": t.get("schema_evolved", False),
-        "files": t["files"],
-        "added": [],
-        "batch_id": -1 if b is None else b,
-    }
-    if t.get("delete_files"):
-        manifest["delete_files"] = t["delete_files"]
-    _carry_spec(manifest, t)
-    return _commit(path, manifest, cur)
+    return _commit_change(
+        path, "rollback", cur, base=read_manifest(path, snapshot_id),
+        batch_id=-1 if b is None else b, extra={"rollback_of": snapshot_id},
+    )
 
 
 def streaming_table_sink(path: str, stat_cols: list[str] | None = None):
@@ -1119,30 +1115,17 @@ def overwrite_snapshot(
     """Commit ``df`` as a full-table OVERWRITE snapshot. Old files
     stay on disk for time travel until :func:`expire_snapshots`."""
     parent = current_snapshot_id(path)
-    spec: list[dict] = []
-    spec_id = 0
-    pm: dict = {}
-    if parent is not None:
-        pm = read_manifest(path, parent)
-        if stat_cols is None:
-            stat_cols = pm.get("stat_cols")
-        spec = pm.get("spec") or []
-        spec_id = int(pm.get("spec_id") or 0)
+    pm = read_manifest(path, parent) if parent is not None else {}
+    if stat_cols is None:
+        stat_cols = pm.get("stat_cols")
     stat_cols = stat_cols or []
-    new = _write_data_files(df, path, stat_cols, spec=spec, spec_id=spec_id)
-    return _commit(
-        path,
-        _carry_spec(
-            {
-                "operation": "overwrite",
-                "schema": df.schema.simpleString(),
-                "stat_cols": stat_cols,
-                "files": new,
-                "added": [e["path"] for e in new],
-            },
-            pm,
-        ),
-        parent,
+    new = _write_data_files(
+        df, path, stat_cols,
+        spec=pm.get("spec") or [], spec_id=int(pm.get("spec_id") or 0),
+    )
+    return _commit_change(
+        path, "overwrite", parent, added=new, replace=True,
+        schema=df.schema.simpleString(), stat_cols=stat_cols,
     )
 
 
@@ -1311,15 +1294,53 @@ def read_snapshot(
         if snapshot_id is None:
             raise FileNotFoundError(f"no branch or tag {ref!r} in {path}")
     m = read_manifest(path, snapshot_id)
+    files = plan_files(path, snapshot_id, prune)
+    if not files:
+        return _scan(spark, m, plan_files(path, snapshot_id)).where("1 = 0")
+    return _apply_delete_files(spark, _scan(spark, m, files), path, m)
+
+
+def _scan(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
+    """Parquet scan of planned ``files`` of the snapshot ``m``, merging
+    footers when its chain evolved the schema."""
     reader = spark.read
     if m.get("schema_evolved"):
         reader = reader.option("mergeSchema", "true")
-    files = plan_files(path, snapshot_id, prune)
-    if not files:
-        all_files = plan_files(path, snapshot_id)
-        df = reader.parquet(*all_files)
-        return df.where("1 = 0")
-    return _apply_delete_files(spark, reader.parquet(*files), path, m)
+    return reader.parquet(*files)
+
+
+def _norm_path(col):
+    """Plain absolute path from a file-URI column: the runtime's
+    rendering of ``_metadata.file_path`` (file:/x vs file:///x) is not
+    contractual, and a join miss would silently resurrect deleted
+    rows — every address join and every collected address goes
+    through this one normalization."""
+    from pyspark.sql import functions as F
+
+    return F.regexp_replace(F.regexp_replace(col, "^file:", ""), "^/+", "/")
+
+
+def _write_delete_file(
+    rows: DataFrame, path: str, **fields
+) -> tuple[list[dict], int]:
+    """Write ``rows`` as one delete file (position deletes:
+    ``file_path``/``pos``; equality deletes: the key column) →
+    (manifest entries tagged with ``fields``, rows written). An empty
+    write adds no entry."""
+    sub = os.path.join(path, "data", uuid.uuid4().hex)
+    rows.repartition(1).write.mode("overwrite").parquet(sub)
+    entries, total = [], 0
+    for name in sorted(os.listdir(sub)):
+        if not name.endswith(".parquet"):
+            continue
+        fpath = os.path.join(sub, name)
+        n = pq.ParquetFile(fpath).metadata.num_rows
+        total += n
+        if n:
+            entries.append(
+                {"path": os.path.relpath(fpath, path), "rows": n, **fields}
+            )
+    return entries, total
 
 
 def _apply_delete_files(
@@ -1362,22 +1383,13 @@ def _address_and_filter(
     dels = (m or {}).get("delete_files") or []
     pos = [e for e in dels if e.get("kind") != "eq"]
     eq = [e for e in dels if e.get("kind") == "eq"]
-    def _norm(col):
-        # plain absolute path from a file URI: the runtime's rendering
-        # of _metadata.file_path (file:/x vs file:///x) is not
-        # contractual, and a join miss would silently resurrect
-        # deleted rows — normalize BOTH sides of every address join
-        return F.regexp_replace(
-            F.regexp_replace(col, "^file:", ""), "^/+", "/"
-        )
-
     if pos:
         ddf = spark.read.parquet(
             *[os.path.join(path, e["path"]) for e in pos]
         )
         df = df.join(
             F.broadcast(ddf),
-            (_norm(F.col("__fp")) == _norm(ddf["file_path"]))
+            (_norm_path(F.col("__fp")) == _norm_path(ddf["file_path"]))
             & (F.col("__pos") == ddf["pos"]),
             "left_anti",
         )
@@ -1399,7 +1411,8 @@ def _address_and_filter(
         ]
         seq_df = spark.createDataFrame(seq_rows, "__sfp string, __fseq long")
         df = df.join(
-            F.broadcast(seq_df), _norm(df["__fp"]) == seq_df["__sfp"], "left"
+            F.broadcast(seq_df), _norm_path(df["__fp"]) == seq_df["__sfp"],
+            "left",
         ).drop("__sfp")
         for col in sorted({e["col"] for e in eq}):
             parts = []
@@ -1446,37 +1459,12 @@ def delete_keys_mor(
     cur = ref_head(path, ref)
     if cur is None:
         raise FileNotFoundError(f"no snapshot on ref {ref!r} in {path}")
-    m = read_manifest(path, cur)
-    sub = os.path.join(path, "data", uuid.uuid4().hex)
-    keys.select(key_col).distinct().repartition(1).write.mode(
-        "overwrite"
-    ).parquet(sub)
-    new_dels = []
-    n_keys = 0
-    for name in sorted(os.listdir(sub)):
-        if not name.endswith(".parquet"):
-            continue
-        fpath = os.path.join(sub, name)
-        md = pq.ParquetFile(fpath).metadata
-        n_keys += md.num_rows
-        if md.num_rows:
-            new_dels.append(
-                {"path": os.path.relpath(fpath, path), "rows": md.num_rows,
-                 "kind": "eq", "col": key_col}
-            )
-    batch = _last_batch_in_chain(path, cur)
-    manifest = {
-        "operation": "delete-mor",
-        "schema": m.get("schema"),
-        "stat_cols": m.get("stat_cols") or [],
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "files": m["files"],
-        "added": [],
-        "delete_files": (m.get("delete_files") or []) + new_dels,
-    }
-    if batch is not None:
-        manifest["batch_id"] = batch
-    sid = _commit(path, _carry_spec(manifest, m), cur, ref=ref)
+    new_dels, n_keys = _write_delete_file(
+        keys.select(key_col).distinct(), path, kind="eq", col=key_col
+    )
+    sid = _commit_change(
+        path, "delete-mor", cur, ref=ref, deletes_added=new_dels
+    )
     return {"snapshot_id": sid, "keys": n_keys}
 
 
@@ -1512,51 +1500,26 @@ def delete_where_mor(
         raise FileNotFoundError(f"no snapshot on ref {ref!r} in {path}")
     m = read_manifest(path, cur)
     candidates = plan_files(path, cur, prune=prune)
-    hits = None
-    if candidates:
-        reader = spark.read
-        if m.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
-        rows = _address_and_filter(
-            spark, reader.parquet(*sorted(candidates)), path, m
-        )
-        hits = rows.where(f"({predicate}) = TRUE").select(
-            F.col("__fp").alias("file_path"),
-            F.col("__pos").alias("pos"),
-        )
     new_dels: list[dict] = []
     rows_deleted = 0
-    if hits is not None:
-        sub = os.path.join(path, "data", uuid.uuid4().hex)
-        hits.repartition(1).write.mode("overwrite").parquet(sub)
-        for name in sorted(os.listdir(sub)):
-            if not name.endswith(".parquet"):
-                continue
-            fpath = os.path.join(sub, name)
-            md = pq.ParquetFile(fpath).metadata
-            rows_deleted += md.num_rows
-            if md.num_rows:
-                new_dels.append(
-                    {"path": os.path.relpath(fpath, path),
-                     "rows": md.num_rows}
-                )
-    batch = _last_batch_in_chain(path, cur)
-    manifest = {
-        "operation": "delete-mor",
-        "schema": m.get("schema"),
-        "stat_cols": m.get("stat_cols") or [],
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "files": m["files"],
-        "added": [],
-        "delete_files": (m.get("delete_files") or []) + new_dels,
-    }
-    if batch is not None:
-        manifest["batch_id"] = batch
-    sid = _commit(path, _carry_spec(manifest, m), cur, ref=ref)
+    if candidates:
+        rows = _address_and_filter(
+            spark, _scan(spark, m, sorted(candidates)), path, m
+        )
+        new_dels, rows_deleted = _write_delete_file(
+            rows.where(f"({predicate}) = TRUE").select(
+                _norm_path(F.col("__fp")).alias("file_path"),
+                F.col("__pos").alias("pos"),
+            ),
+            path,
+        )
+    sid = _commit_change(
+        path, "delete-mor", cur, ref=ref, deletes_added=new_dels
+    )
     return {
         "snapshot_id": sid,
         "rows_deleted": rows_deleted,
-        "delete_files": len(manifest["delete_files"]),
+        "delete_files": len(m.get("delete_files") or []) + len(new_dels),
     }
 
 
@@ -1613,62 +1576,36 @@ def merge_into_mor(
     )
     new_dels: list[dict] = []
     rows_shadowed = 0
-    files_touched = 0
+    touched: set[str] = set()
     if candidates:
-        reader = spark.read
-        if m.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
         rows = _address_and_filter(
-            spark, reader.parquet(*sorted(candidates)), path, m
+            spark, _scan(spark, m, sorted(candidates)), path, m
         )
-        hits = rows.join(F.broadcast(keys), key_col, "inner").select(
-            F.col("__fp").alias("file_path"),
-            F.col("__pos").alias("pos"),
+        new_dels, rows_shadowed = _write_delete_file(
+            rows.join(F.broadcast(keys), key_col, "inner").select(
+                _norm_path(F.col("__fp")).alias("file_path"),
+                F.col("__pos").alias("pos"),
+            ),
+            path,
         )
-        sub = os.path.join(path, "data", uuid.uuid4().hex)
-        hits.repartition(1).write.mode("overwrite").parquet(sub)
-        touched = set()
-        for name in sorted(os.listdir(sub)):
-            if not name.endswith(".parquet"):
-                continue
-            fpath = os.path.join(sub, name)
-            md = pq.ParquetFile(fpath).metadata
-            rows_shadowed += md.num_rows
-            if md.num_rows:
-                new_dels.append(
-                    {"path": os.path.relpath(fpath, path),
-                     "rows": md.num_rows}
-                )
-                # delete files are kilobyte-scale: reading the column
-                # back for the touched-file metric is metadata-cheap
-                touched.update(
-                    pq.read_table(fpath, columns=["file_path"])
-                    .column("file_path").to_pylist()
-                )
-        files_touched = len(touched)
-    schema = updates.schema.simpleString()
-    evolved = bool(m.get("schema_evolved")) or m.get("schema") != schema
+        # delete files are kilobyte-scale: reading the column back for
+        # the touched-file metric is metadata-cheap
+        for e in new_dels:
+            touched.update(
+                pq.read_table(
+                    os.path.join(path, e["path"]), columns=["file_path"]
+                ).column("file_path").to_pylist()
+            )
     # an explicit batch_id tags THIS commit (the streaming upsert
-    # sink's exactly-once marker); otherwise carry the last one
-    batch = (
-        _last_batch_in_chain(path, cur) if batch_id is None else int(batch_id)
+    # sink's exactly-once marker); otherwise the last one is carried
+    sid = _commit_change(
+        path, "merge-mor", cur, ref=ref, added=new, deletes_added=new_dels,
+        schema=updates.schema.simpleString(), batch_id=batch_id,
     )
-    manifest = {
-        "operation": "merge-mor",
-        "schema": m.get("schema") if not evolved else schema,
-        "stat_cols": stat_cols,
-        "schema_evolved": evolved,
-        "files": m["files"] + new,
-        "added": [e["path"] for e in new],
-        "delete_files": (m.get("delete_files") or []) + new_dels,
-    }
-    if batch is not None:
-        manifest["batch_id"] = batch
-    sid = _commit(path, _carry_spec(manifest, m), cur, ref=ref)
     return {
         "snapshot_id": sid,
         "rows_shadowed": rows_shadowed,
-        "files_touched": files_touched,
+        "files_touched": len(touched),
     }
 
 
@@ -1727,22 +1664,10 @@ def compact_data_files(
     cur = current_snapshot_id(path)
     if cur is None:
         raise FileNotFoundError(f"no current snapshot in {path}")
-    m = read_manifest(path, cur)
     df = read_snapshot(spark, path, cur).coalesce(int(target_files))
-    stat_cols = m.get("stat_cols") or []
+    stat_cols = read_manifest(path, cur).get("stat_cols") or []
     new = _write_data_files(df, path, stat_cols)
-    batch = last_committed_batch(path)
-    manifest = {
-        "operation": "replace",
-        "schema": m.get("schema"),
-        "stat_cols": stat_cols,
-        "schema_evolved": False,
-        "files": new,
-        "added": [e["path"] for e in new],
-    }
-    if batch is not None:
-        manifest["batch_id"] = batch
-    return _commit(path, _carry_spec(manifest, m), cur)
+    return _commit_change(path, "replace", cur, added=new, replace=True)
 
 
 def zorder_data_files(
@@ -1806,19 +1731,12 @@ def zorder_data_files(
     )
     stat_cols = sorted(set(m.get("stat_cols") or []) | set(cols))
     new = _write_data_files(clustered, path, stat_cols)
-    batch = last_committed_batch(path)
-    manifest = {
-        "operation": "replace",
-        "schema": m.get("schema"),
-        "stat_cols": stat_cols,
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "sort_order": {"kind": "zorder", "cols": list(cols), "bits": bits},
-        "files": new,
-        "added": [e["path"] for e in new],
-    }
-    if batch is not None:
-        manifest["batch_id"] = batch
-    return _commit(path, _carry_spec(manifest, m), cur)
+    return _commit_change(
+        path, "replace", cur, added=new, replace=True, stat_cols=stat_cols,
+        extra={
+            "sort_order": {"kind": "zorder", "cols": list(cols), "bits": bits}
+        },
+    )
 
 
 def remove_orphan_files(path: str, older_than_s: float = 0.0) -> list[str]:
@@ -1951,9 +1869,9 @@ def snapshot_diff(
         col = pq.read_table(
             os.path.join(path, dp), columns=["file_path"]
         ).column("file_path")
+        # position-delete files hold normalized absolute paths
         touched.update(
-            os.path.relpath(_strip_file_uri(fp), path)
-            for fp in set(col.to_pylist())
+            os.path.relpath(fp, path) for fp in set(col.to_pylist())
         )
     re_scan = touched & pa & pb
     if eq_min_seq is not None:
@@ -2007,16 +1925,6 @@ def snapshot_diff(
             *[picked[c].alias(c) for c in val_cols],
         )
     )
-
-
-def _strip_file_uri(u: str) -> str:
-    """``input_file_name()`` yields a ``file:///...`` URI; reduce it
-    to the plain absolute path the manifest uses."""
-    if u.startswith("file:"):
-        u = u[5:]
-    while u.startswith("//"):
-        u = u[1:]
-    return u
 
 
 def merge_into(
@@ -2074,63 +1982,40 @@ def merge_into(
         if lo is not None
         else set()
     )
-    reader = spark.read
-    if m.get("schema_evolved"):
-        reader = reader.option("mergeSchema", "true")
-    live_dels = m.get("delete_files")
     matched: set = set()
     if candidates:
         # the captured __fp address replaces input_file_name(): the
         # latter cannot resolve once the MOR anti-join puts a second
         # source in the plan
         cand_rows = _address_and_filter(
-            spark, reader.parquet(*sorted(candidates)), path, m
+            spark, _scan(spark, m, sorted(candidates)), path, m
         )
         hit = (
-            cand_rows.select(key_col, "__fp")
+            cand_rows.select(key_col, _norm_path(F.col("__fp")).alias("__fp"))
             .join(F.broadcast(keys), key_col, "inner")
             .select("__fp")
             .distinct()
         )
         # file paths only — bounded by the candidate file count
-        matched = {_strip_file_uri(r["__fp"]) for r in hit.collect()}
-    kept = [
-        e
-        for e in all_entries
-        if os.path.join(path, e["path"]) not in matched
-    ]
+        matched = {r["__fp"] for r in hit.collect()}
     if matched:
         # position-delete-shadowed rows must not resurrect through
         # the rewrite: filter them before the anti-join
         base_rows = _apply_delete_files(
-            spark, reader.parquet(*sorted(matched)), path, m
+            spark, _scan(spark, m, sorted(matched)), path, m
         )
         keep_rows = base_rows.join(F.broadcast(keys), key_col, "left_anti")
         new_rows = keep_rows.unionByName(updates, allowMissingColumns=True)
     else:
         new_rows = updates
-    schema = new_rows.schema.simpleString()
-    evolved = bool(m.get("schema_evolved")) or m.get("schema") != schema
     new = _write_data_files(new_rows, path, stat_cols)
-    batch = last_committed_batch(path)
-    manifest = {
-        "operation": "merge",
-        # the schema `evolved` was computed against — recording the
-        # stale parent schema here made every later append re-diff
-        # against a schema the table no longer has
-        "schema": schema,
-        "stat_cols": stat_cols,
-        "schema_evolved": evolved,
-        "files": kept + new,
-        "added": [e["path"] for e in new],
-    }
-    if live_dels:
-        # entries referencing rewritten (now dead) files are inert;
-        # entries referencing kept files must keep applying
-        manifest["delete_files"] = live_dels
-    if batch is not None:
-        manifest["batch_id"] = batch
-    sid = _commit(path, _carry_spec(manifest, m), cur)
+    # delete-file entries referencing the rewritten (now dead) files
+    # are inert; entries referencing kept files must keep applying
+    sid = _commit_change(
+        path, "merge", cur, added=new,
+        removed={os.path.relpath(f, path) for f in matched},
+        schema=new_rows.schema.simpleString(),
+    )
     return {
         "snapshot_id": sid,
         "files_total": len(all_entries),
@@ -2176,53 +2061,31 @@ def delete_where(
     stat_cols = m.get("stat_cols") or []
     all_entries = m["files"]
     candidates = set(plan_files(path, cur, prune=prune))
-    live_dels = m.get("delete_files")
     matched: set = set()
     rows_deleted = 0
     if candidates:
-        reader = spark.read
-        if m.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
         cand_rows = _address_and_filter(
-            spark, reader.parquet(*sorted(candidates)), path, m
+            spark, _scan(spark, m, sorted(candidates)), path, m
         )
         per_file = (
             cand_rows.where(f"({predicate}) = TRUE")
-            .groupBy(F.col("__fp").alias("__f"))
+            .groupBy(_norm_path(F.col("__fp")).alias("__f"))
             .count()
             .collect()
         )
-        matched = {_strip_file_uri(r["__f"]) for r in per_file}
+        matched = {r["__f"] for r in per_file}
         rows_deleted = sum(r["count"] for r in per_file)
-    kept = [
-        e
-        for e in all_entries
-        if os.path.join(path, e["path"]) not in matched
-    ]
     new: list[dict] = []
     if matched:
-        reader = spark.read
-        if m.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
         base_rows = _apply_delete_files(
-            spark, reader.parquet(*sorted(matched)), path, m
+            spark, _scan(spark, m, sorted(matched)), path, m
         )
         keep_rows = base_rows.where(f"({predicate}) IS NOT TRUE")
         new = _write_data_files(keep_rows, path, stat_cols)
-    batch = last_committed_batch(path)
-    manifest = {
-        "operation": "delete",
-        "schema": m.get("schema"),
-        "stat_cols": stat_cols,
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "files": kept + new,
-        "added": [e["path"] for e in new],
-    }
-    if live_dels:
-        manifest["delete_files"] = live_dels
-    if batch is not None:
-        manifest["batch_id"] = batch
-    sid = _commit(path, _carry_spec(manifest, m), cur)
+    sid = _commit_change(
+        path, "delete", cur, added=new,
+        removed={os.path.relpath(f, path) for f in matched},
+    )
     return {
         "snapshot_id": sid,
         "files_total": len(all_entries),

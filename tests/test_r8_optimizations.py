@@ -41,25 +41,48 @@ def _docs(spark, n=60):
     )
 
 
-def test_append_snapshots_split_equals_n_appends(spark, tmp_path):
+def _comparable(m):
+    """A manifest minus what legitimately differs between two equal
+    histories: commit time, snapshot ids, sequence stamps and data-file
+    paths."""
+    out = {
+        k: v
+        for k, v in m.items()
+        if k not in ("ts", "snapshot_id", "parent_id")
+    }
+    out["files"] = [
+        {k: v for k, v in e.items() if k not in ("path", "seq")}
+        for e in m["files"]
+    ]
+    out["added"] = len(m["added"])
+    return out
+
+
+def _split_vs_loop(spark, tmp_path, prepare=lambda t: None):
+    """Build one table with append_snapshots_split and one with three
+    append_snapshot calls (after the same ``prepare``) and assert the
+    chains match manifest for manifest."""
     d = _docs(spark).withColumn("__b", F.pmod(F.col("doc_id"), F.lit(3)))
     t_split = str(tmp_path / "t_split")
     t_loop = str(tmp_path / "t_loop")
+    prepare(t_split)
+    prepare(t_loop)
+    n0 = len(snapshot_chain(t_split))
     sids = append_snapshots_split(d.repartition(1), t_split, "__b", [0, 1, 2])
     for i in range(3):
         append_snapshot(
             d.where(F.col("__b") == i).drop("__b").coalesce(1), t_loop
         )
     assert len(sids) == 3
-    # same chain length and operations
+    # same chain, manifest for manifest
     ch_s = snapshot_chain(t_split)
     ch_l = snapshot_chain(t_loop)
-    assert len(ch_s) == len(ch_l) == 3
+    assert len(ch_s) == len(ch_l) == n0 + 3
     for sid_s, sid_l in zip(ch_s, ch_l):
         m_s, m_l = read_manifest(t_split, sid_s), read_manifest(t_loop, sid_l)
-        assert m_s["operation"] == m_l["operation"] == "append"
-        assert m_s["schema"] == m_l["schema"]
-        assert len(m_s["added"]) == len(m_l["added"]) == 1
+        assert _comparable(m_s) == _comparable(m_l), (sid_s, sid_l)
+    for sid in ch_s[n0:]:
+        assert read_manifest(t_split, sid)["operation"] == "append"
     # same visible rows, and the same per-snapshot incremental delta
     rows_s = {
         (r["doc_id"], r["lang"])
@@ -70,7 +93,7 @@ def test_append_snapshots_split_equals_n_appends(spark, tmp_path):
         for r in read_snapshot(spark, t_loop).collect()
     }
     assert rows_s == rows_l
-    for k, (sid_s, sid_l) in enumerate(zip(ch_s, ch_l)):
+    for k, sid_s in enumerate(ch_s[n0:]):
         inc_s = {
             (r["doc_id"], r["lang"])
             for r in incremental_read(spark, t_split, sid_s - 1, sid_s).collect()
@@ -80,6 +103,25 @@ def test_append_snapshots_split_equals_n_appends(spark, tmp_path):
             for r in d.where(F.col("__b") == k).drop("__b").collect()
         }
         assert inc_s == want
+
+
+def test_append_snapshots_split_equals_n_appends(spark, tmp_path):
+    _split_vs_loop(spark, tmp_path)
+
+
+def test_append_snapshots_split_equals_n_appends_after_spec_revert(
+    spark, tmp_path
+):
+    """On a table whose spec was set and then reverted, the split
+    commits must keep the spec-id counter exactly as appends do."""
+    from kblock_spark.io.tableformat import set_partition_spec
+
+    def prepare(t):
+        append_snapshot(_docs(spark, 6).coalesce(1), t, stat_cols=["doc_id"])
+        set_partition_spec(t, [{"col": "lang", "transform": "identity"}])
+        set_partition_spec(t, [])
+
+    _split_vs_loop(spark, tmp_path, prepare)
 
 
 def test_append_snapshots_split_rejects_spec_tables(spark, tmp_path):

@@ -1,8 +1,10 @@
 """Model-based fuzz of the table-format DML surface: a random
-sequence of append / MOR-upsert / equality-delete / predicate-delete
-/ rollback / compaction ops is applied to a real snapshot table AND
+sequence of append / split append / MOR and CoW upsert /
+equality-delete / MOR and CoW predicate-delete / rollback / compaction
+/ z-order / partition-spec ops is applied to a real snapshot table AND
 to a plain in-memory dict model; after every committing op the
-merge-on-read scan must equal the model exactly. This is the test
+merge-on-read scan must equal the model exactly, and at the end a
+pruned point lookup of a present and an absent key must too. This is the test
 shape that catches cross-op interaction bugs no single-op test can
 (e.g. an eq delete's sequence scoping vs a later rollback, or a
 compaction materializing deletes under a pending chain) — each
@@ -17,16 +19,33 @@ from pyspark.sql import functions as F
 
 from kblock_spark.io.tableformat import (
     append_snapshot,
+    append_snapshots_split,
     compact_data_files,
     current_snapshot_id,
     delete_keys_mor,
+    delete_where,
     delete_where_mor,
+    merge_into,
     merge_into_mor,
+    read_manifest,
     read_snapshot,
     rollback_to,
+    set_partition_spec,
+    zorder_data_files,
 )
 
-_OPS = ["append", "upsert", "del_keys", "del_where", "rollback", "compact"]
+_OPS = [
+    "append", "split", "upsert", "merge", "del_keys", "del_where",
+    "delete", "rollback", "compact", "zorder", "spec",
+]
+# spec op choices: identity, bucket (two moduli, so a later spec can
+# re-bucket files an older one wrote) or revert to unpartitioned
+_SPECS = [
+    [{"col": "doc_id", "transform": "identity"}],
+    [{"col": "doc_id", "transform": "bucket", "n": 2}],
+    [{"col": "doc_id", "transform": "bucket", "n": 4}],
+    [],
+]
 _UNIQ = [0]  # distinct table dir per hypothesis example (tmp_path is
 # function-scoped, shared across examples of one test call)
 
@@ -67,20 +86,29 @@ def test_dml_sequences_match_model(spark, tmp_path, ops):
     commit_state()
 
     for op, r in ops:
-        if op == "append":
+        if op in ("append", "split"):
             n = 3 + r % 8
             batch = {next_key + i: (next_key + i) * 3 + r % 100 for i in range(n)}
             next_key += n
-            append_snapshot(_rows_df(spark, batch), t, stat_cols=["doc_id"])
+            if op == "append":
+                append_snapshot(_rows_df(spark, batch), t, stat_cols=["doc_id"])
+            elif read_manifest(t).get("spec"):
+                continue  # split appends need a spec-less table
+            else:
+                append_snapshots_split(
+                    _rows_df(spark, batch).withColumn("__b", F.col("doc_id") % 2),
+                    t, "__b", [0, 1],
+                )
             model.update(batch)
-        elif op == "upsert":
+        elif op in ("upsert", "merge"):
             existing = sorted(model)[:: max(1, r % 5 + 1)][:5]
             fresh = [next_key + i for i in range(r % 3)]
             next_key += r % 3
             batch = {k: 10_000 + k + r % 100 for k in [*existing, *fresh]}
             if not batch:
                 continue
-            merge_into_mor(spark, t, _rows_df(spark, batch), "doc_id")
+            merge = merge_into_mor if op == "upsert" else merge_into
+            merge(spark, t, _rows_df(spark, batch), "doc_id")
             model.update(batch)
         elif op == "del_keys":
             victims = sorted(model)[r % 3 :: max(1, r % 7 + 2)][:4]
@@ -93,9 +121,10 @@ def test_dml_sequences_match_model(spark, tmp_path, ops):
             )
             for k in victims:
                 model.pop(k, None)
-        elif op == "del_where":
+        elif op in ("del_where", "delete"):
             m = r % 5 + 2
-            delete_where_mor(spark, t, f"v % {m} = {r % m}")
+            delete = delete_where_mor if op == "del_where" else delete_where
+            delete(spark, t, f"v % {m} = {r % m}")
             model = {k: v for k, v in model.items() if v % m != r % m}
         elif op == "rollback":
             sid = sorted(states)[r % len(states)]
@@ -103,12 +132,33 @@ def test_dml_sequences_match_model(spark, tmp_path, ops):
             model = dict(states[sid])
         elif op == "compact":
             compact_data_files(spark, t, target_files=2)
+        elif op == "zorder":
+            zorder_data_files(spark, t, ["doc_id", "v"], target_files=2)
+        elif op == "spec":
+            set_partition_spec(t, _SPECS[r % len(_SPECS)])
         commit_state()
         got = {
             row["doc_id"]: row["v"]
             for row in read_snapshot(spark, t).collect()
         }
         assert got == model, (op, r, len(got), len(model))
+
+    # a pruned point lookup (bucket/identity/min-max planning) finds a
+    # present key and nothing for an absent one
+    r_last = ops[-1][1]
+    gone = sorted(set(range(next_key)) - set(model)) or [next_key]
+    probes = [gone[r_last % len(gone)]]
+    if model:
+        probes.append(sorted(model)[r_last % len(model)])
+    for k in probes:
+        got = {
+            row["doc_id"]: row["v"]
+            for row in read_snapshot(spark, t, prune=("doc_id", k, k))
+            .where(F.col("doc_id") == k)
+            .collect()
+        }
+        want = {k: model[k]} if k in model else {}
+        assert got == want, f"pruned lookup of {k}"
 
     # time travel back through every recorded state still reproduces it
     for sid, snap in list(states.items())[-3:]:

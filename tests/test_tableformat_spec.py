@@ -202,3 +202,44 @@ def test_truncate_range_pruning(spark, tmp_path):
     keep2 = [e for e in trunc
              if e["partition"]["truncate_doc_id"] in ("100", "200")]
     assert len(planned2) == plain + len(keep2)
+
+
+def test_split_append_after_spec_revert_keeps_spec_ids_unique(spark, tmp_path):
+    """A split append onto a table whose spec was reverted must carry
+    the spec-id counter like any other commit. Dropping it made the
+    next spec re-issue the id the old bucket(4) files carry, and point
+    lookups then pruned those files by the new modulus and lost rows."""
+    import pyarrow.parquet as pq
+
+    from kblock_spark.io.tableformat import append_snapshots_split
+
+    t = str(tmp_path / "tbl")
+    append_snapshot(_df(spark, 0, 10), t)
+    set_partition_spec(t, [{"col": "doc_id", "transform": "bucket", "n": 4}])
+    append_snapshot(_df(spark, 10, 60), t)
+    set_partition_spec(t, [])
+    append_snapshots_split(
+        _df(spark, 60, 80).withColumn("__b", F.col("doc_id") % 2),
+        t, "__b", [0, 1],
+    )
+    set_partition_spec(t, [{"col": "doc_id", "transform": "bucket", "n": 8}])
+    append_snapshot(_df(spark, 80, 100), t)
+    m = read_manifest(t)
+    # every key's file survives the plan of its own point lookup
+    file_of = {}
+    for e in m["files"]:
+        f = os.path.join(t, e["path"])
+        ids = pq.read_table(f, columns=["doc_id"]).column("doc_id")
+        file_of.update((k, f) for k in ids.to_pylist())
+    assert sorted(file_of) == list(range(100))
+    lost = [
+        k for k, f in file_of.items()
+        if f not in plan_files(t, prune=("doc_id", k, k))
+    ]
+    assert not lost, f"point lookups plan away their row: {lost}"
+    for k in range(10, 100, 9):
+        assert read_snapshot(spark, t, prune=("doc_id", k, k)).where(
+            F.col("doc_id") == k
+        ).count() == 1
+    assert m["spec_id"] == 3
+    assert {e.get("spec_id") for e in m["files"]} == {None, 1, 3}
