@@ -10,12 +10,16 @@ tiling is a deterministic lat/lon grid with similar cell area) carried
 as an int64 column — spatial joins become plain Catalyst equi-joins on
 the cell id, and kNN expands rings of neighboring cells (k_ring).
 
-All functions are numpy-vectorized for use inside pandas UDFs.
+The functions are numpy-vectorized for use inside pandas UDFs, except
+``_cell_expr`` and ``_box_cells_expr``, the Catalyst twins of
+``cell_of`` and ``cells_covering_bbox``: they compute the same ids
+inside the JVM, for stages that need cell ids but no geometry.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column, functions as F
 
 _BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
@@ -109,6 +113,38 @@ def cells_covering_bbox(
     iys = np.arange(iy0, iy1 + 1, dtype=np.int64)
     gx, gy = np.meshgrid(ixs, iys)
     return ((gx.reshape(-1) << np.int64(32)) | gy.reshape(-1))
+
+
+def _cell_expr(lon, lat, cell_deg: float) -> Column:
+    """Catalyst twin of cell_of: floor-index the grid and pack
+    (ix<<32)|iy. Bit-identical to the numpy path (same double
+    division, same IEEE floor, iy ≥ 0 for valid latitudes so OR ==
+    add), but pure JVM, so a stage that only needs cell ids never
+    starts a Python runner."""
+    ix = F.floor((lon + F.lit(180.0)) / F.lit(float(cell_deg)))
+    iy = F.floor((lat + F.lit(90.0)) / F.lit(float(cell_deg)))
+    return F.shiftleft(ix, 32).bitwiseOR(iy)
+
+
+def _box_cells_expr(xmin, ymin, xmax, ymax, cell_deg: float) -> Column:
+    """Catalyst twin of cells_covering_bbox: all cell ids whose tile
+    intersects the box, as nested sequence/transform — same SET of
+    cells as the numpy meshgrid (order differs; every consumer is an
+    order-insensitive join/aggregate)."""
+    c = F.lit(float(cell_deg))
+    ix0 = F.floor((xmin + F.lit(180.0)) / c)
+    ix1 = F.floor((xmax + F.lit(180.0)) / c)
+    iy0 = F.floor((ymin + F.lit(90.0)) / c)
+    iy1 = F.floor((ymax + F.lit(90.0)) / c)
+    return F.flatten(
+        F.transform(
+            F.sequence(ix0, ix1),
+            lambda ix: F.transform(
+                F.sequence(iy0, iy1),
+                lambda iy: F.shiftleft(ix, 32).bitwiseOR(iy),
+            ),
+        )
+    )
 
 
 def cells_covering_polygon(

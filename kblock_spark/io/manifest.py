@@ -11,9 +11,13 @@ Spark-native equivalent: a small parquet **manifest table**
 
 plus append-mode partitioned output. Pending work = partition keys
 anti-joined against completed manifest entries; a restarted run skips
-finished partitions and appends only the missing ones. Only partition
-KEYS ever touch the driver (metadata, not data) — same cost model as
-the reference's directory listings.
+finished partitions and appends only the missing ones. A first run
+(no manifest yet) skips the anti-join: every key is pending. Only
+partition KEYS ever touch the driver (metadata, not data) — same cost
+model as the reference's directory listings. The manifest lives
+wherever Spark can write (local path, ``file://`` URI, HDFS, object
+store): every existence check and delete goes through the Hadoop
+FileSystem API.
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ from __future__ import annotations
 import os
 import time
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 MANIFEST_SCHEMA = (
@@ -50,13 +56,18 @@ def escape_partition_value(v: str) -> str:
     )
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` via the Hadoop FileSystem API —
+    resolves through the same filesystem Spark writes to (local, HDFS,
+    object store, ``file://`` URIs), unlike os.path/shutil, which
+    treat a URI as a relative path and silently miss."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def _delete_dir_any_fs(spark: SparkSession, path: str):
-    """Recursive delete via the Hadoop FileSystem API — resolves
-    through the same filesystem Spark writes to (local, HDFS, object
-    store), unlike os.path/shutil which silently no-op off-driver."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Recursive delete through the Hadoop FileSystem API."""
+    fs, p = _fs_path(spark, path)
     if fs.exists(p):
         fs.delete(p, True)
 
@@ -67,8 +78,10 @@ class CheckpointManifest:
         self.path = path
 
     def _exists(self) -> bool:
-        return os.path.exists(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
+        fs, p = _fs_path(self.spark, self.path)
+        return fs.exists(p) and any(
+            st.getPath().getName().endswith(".parquet")
+            for st in fs.listStatus(p)
         )
 
     def entries(self) -> DataFrame:
@@ -87,28 +100,34 @@ class CheckpointManifest:
 
     def pending(self, keys: DataFrame, key_col: str) -> DataFrame:
         """Anti-join of the work universe against completed keys
-        (the reference's ``~isin(completed)``, batch_4:491,509)."""
+        (the reference's ``~isin(completed)``, batch_4:491,509).
+        With no manifest on disk nothing is completed, so the keys are
+        returned as they are — no empty scan, no join."""
+        if not self._exists():
+            return keys
         done = self.completed().withColumnRenamed("partition_key", key_col)
         return keys.join(done, key_col, "left_anti")
 
     def record(self, rows: list[dict]):
+        """Append one manifest row per dict. The rows go to Spark as
+        one Arrow (pandas) frame with the column dtypes of
+        MANIFEST_SCHEMA, not as Python rows."""
         if not rows:
             return
-        df = self.spark.createDataFrame(
-            [
-                (
-                    str(r["partition_key"]),
-                    r.get("status", "done"),
-                    int(r.get("rows", 0)),
-                    int(r.get("wall_ms", 0)),
-                    int(r.get("attempt", 1)),
-                    str(r.get("input_fingerprint", "")),
-                    str(r.get("ts", "")),
-                )
-                for r in rows
-            ],
-            MANIFEST_SCHEMA,
+        pdf = pd.DataFrame(
+            {
+                "partition_key": [str(r["partition_key"]) for r in rows],
+                "status": [r.get("status", "done") for r in rows],
+                "rows": np.array([r.get("rows", 0) for r in rows], np.int64),
+                "wall_ms": np.array([r.get("wall_ms", 0) for r in rows], np.int64),
+                "attempt": np.array([r.get("attempt", 1) for r in rows], np.int32),
+                "input_fingerprint": [
+                    str(r.get("input_fingerprint", "")) for r in rows
+                ],
+                "ts": [str(r.get("ts", "")) for r in rows],
+            }
         )
+        df = self.spark.createDataFrame(pdf, MANIFEST_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.path)
 
 

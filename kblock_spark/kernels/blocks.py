@@ -26,7 +26,7 @@ from ..geo.geom import (
 )
 from ..geo.mercator import lonlat_to_mercator
 from ..geo.polygonize import polygonize, representative_point
-from ..geo.tiling import geohash_encode
+from ..geo.tiling import _box_cells_expr, geohash_encode
 
 # footpath classes excluded from block delineation
 # (kblock/batch_1b_generate_blocks.py:319)
@@ -143,25 +143,6 @@ def admin_bboxes(admin: DataFrame) -> DataFrame:
     return street_bboxes(admin)
 
 
-def _bbox_cells_udf(cell_deg: float):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def bbox_cells(xmin, ymin, xmax, ymax):
-        import pandas as pd
-
-        from ..geo.tiling import cells_covering_bbox
-
-        return pd.Series(
-            [
-                cells_covering_bbox(a, b, c, d, cell_deg).tolist()
-                for a, b, c, d in zip(xmin, ymin, xmax, ymax)
-            ]
-        )
-
-    return bbox_cells
-
-
 def delineate_blocks(
     admin: DataFrame, streets: DataFrame, pair_cell_deg: float = 0.01
 ) -> DataFrame:
@@ -192,13 +173,11 @@ def delineate_blocks(
     ).collect()[0]
     max_dim = max(float(ext["dx"] or 0.0), float(ext["dy"] or 0.0))
     cell_deg = max(pair_cell_deg, max_dim / MAX_CELLS_PER_AXIS)
-    cells = _bbox_cells_udf(cell_deg)
-    s_cells = s.withColumn(
-        "cell", F.explode(cells("xmin", "ymin", "xmax", "ymax"))
-    ).select("street_id", "coords", "cell")
-    a_cells = a0.withColumn(
-        "cell", F.explode(cells("xmin", "ymin", "xmax", "ymax"))
-    ).select("gadm_code", "cell")
+    cells = F.explode(_box_cells_expr(
+        F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"), cell_deg
+    ))
+    s_cells = s.withColumn("cell", cells).select("street_id", "coords", "cell")
+    a_cells = a0.withColumn("cell", cells).select("gadm_code", "cell")
     pairs = (
         s_cells.join(F.broadcast(a_cells), "cell", "inner")
         .select(F.col("gadm_code").alias("g_code"), "street_id", "coords")

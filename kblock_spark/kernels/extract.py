@@ -1,20 +1,21 @@
-"""Vectorized text-extraction + geocoding UDFs over the pages table.
+"""Text extraction, geocoding and grid cells over the pages table.
 
 input_hint contract: ``extract_text(html)`` must be deterministic and
 byte-identical per url; geocoding pulls the ``geo:lat,lon`` token out
-of ``text``. Both are Arrow-batched pandas UDFs using pandas string
-kernels — no per-row Python in the plan.
+of ``text``. Extraction (and the opt-in geohash) are Arrow-batched
+pandas UDFs; geocoding and the cell id are Catalyst expressions, so
+``geocoded_points`` starts no Python runner unless a geohash is asked
+for.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType, StringType
+from pyspark.sql.types import StringType
 
-from ..geo.tiling import DEFAULT_CELL_DEG, cell_of, geohash_encode
+from ..geo.tiling import DEFAULT_CELL_DEG, _cell_expr, geohash_encode
 
 _BODY_OPEN = b"<body>"
 _BODY_CLOSE = b"</body>"
@@ -54,14 +55,6 @@ def with_geocode(df, text_col: str = "text"):
     )
 
 
-def make_cell_udf(cell_deg: float):
-    @pandas_udf(LongType())
-    def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cell_of(lon.to_numpy(), lat.to_numpy(), cell_deg))
-
-    return _cell
-
-
 @pandas_udf(StringType())
 def geohash_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
     """Precision-12 geohash (reference uses pygeohash at precision 18
@@ -75,12 +68,15 @@ def geocoded_points(
 ):
     """pages → building-point table (url, lat, lon, cell
     [, point_geohash]). The kblock 'buildings' role (SURVEY.md §1:
-    geocoded pages play building points). The geohash sort key is
-    opt-in — the pipeline's spatial index is the grid cell; geohash is
+    geocoded pages play building points). Geocode and cell id are
+    Catalyst expressions (the cell bit-identical to ``cell_of``), so
+    the PIP probe stage that consumes this table runs no Python before
+    its refine kernel. The geohash sort key is opt-in and a pandas
+    UDF — the pipeline's spatial index is the grid cell; geohash is
     only needed for reference-schema parity outputs."""
     df = with_geocode(pages_df).where(F.col("lat").isNotNull() & F.col("lon").isNotNull())
     out = df.select("url", "lat", "lon").withColumn(
-        "cell", make_cell_udf(cell_deg)(F.col("lon"), F.col("lat"))
+        "cell", _cell_expr(F.col("lon"), F.col("lat"), cell_deg)
     )
     if with_geohash:
         out = out.withColumn("point_geohash", geohash_udf(F.col("lon"), F.col("lat")))

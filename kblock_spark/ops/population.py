@@ -30,40 +30,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from ..geo.geom import box_polygon_overlap_area, unpack_rings
-from ..geo.tiling import DEFAULT_CELL_DEG
+from ..geo.tiling import DEFAULT_CELL_DEG, _box_cells_expr, _cell_expr
 from .spatial_join import polygon_side_fits_broadcast, polygons_with_cells
-
-
-def _cell_expr(lon, lat, cell_deg: float) -> F.Column:
-    """Catalyst twin of geo.tiling.cell_of: floor-index the grid and
-    pack (ix<<32)|iy. Bit-identical to the numpy path (same double
-    division, same IEEE floor, iy ≥ 0 for valid latitudes so OR ==
-    add) — but pure JVM, so the hot point-in-box stage never crosses
-    the Python boundary (guide §4.1)."""
-    ix = F.floor((lon + F.lit(180.0)) / F.lit(float(cell_deg)))
-    iy = F.floor((lat + F.lit(90.0)) / F.lit(float(cell_deg)))
-    return F.shiftleft(ix, 32).bitwiseOR(iy)
-
-
-def _box_cells_expr(xmin, ymin, xmax, ymax, cell_deg: float) -> F.Column:
-    """Catalyst twin of cells_covering_bbox: all cell ids whose tile
-    intersects the box, as nested sequence/transform — same SET of
-    cells as the numpy meshgrid (order differs; every consumer is an
-    order-insensitive join/aggregate)."""
-    c = F.lit(float(cell_deg))
-    ix0 = F.floor((xmin + F.lit(180.0)) / c)
-    ix1 = F.floor((xmax + F.lit(180.0)) / c)
-    iy0 = F.floor((ymin + F.lit(90.0)) / c)
-    iy1 = F.floor((ymax + F.lit(90.0)) / c)
-    return F.flatten(
-        F.transform(
-            F.sequence(ix0, ix1),
-            lambda ix: F.transform(
-                F.sequence(iy0, iy1),
-                lambda iy: F.shiftleft(ix, 32).bitwiseOR(iy),
-            ),
-        )
-    )
 
 
 def _overlap_area_udf():

@@ -27,9 +27,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..geo.tiling import DEFAULT_CELL_DEG
+from ..geo.tiling import DEFAULT_CELL_DEG, _cell_expr
 from ..io.synth import PAGES_SCHEMA
-from ..kernels.extract import extract_text_udf, make_cell_udf, with_geocode
+from ..kernels.extract import extract_text_udf, with_geocode
 
 
 def read_pages_stream(
@@ -57,7 +57,7 @@ def stream_tile_rollup(
     pts = with_geocode(ex, "text2").where(
         F.col("lat").isNotNull() & F.col("lon").isNotNull()
     )
-    pts = pts.withColumn("cell", make_cell_udf(cell_deg)(F.col("lon"), F.col("lat")))
+    pts = pts.withColumn("cell", _cell_expr(F.col("lon"), F.col("lat"), cell_deg))
     return (
         pts.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), "cell")

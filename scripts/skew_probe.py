@@ -74,6 +74,7 @@ def main(argv=None):
     )
     import pandas as _pd
 
+    from kblock_spark.geo.tiling import _cell_expr
     from kblock_spark.io.synth import (
         ADMIN_SIZE_DEG,
         ORIGIN_LAT,
@@ -83,7 +84,7 @@ def main(argv=None):
         synth_streets,
     )
     from kblock_spark.kernels.blocks import delineate_blocks
-    from kblock_spark.kernels.extract import make_cell_udf, with_geocode
+    from kblock_spark.kernels.extract import with_geocode
     from kblock_spark.ops.hierarchy import (
         multires_rollup,
         salt_plan,
@@ -144,7 +145,7 @@ def main(argv=None):
             ).withColumn(
                 "lat", F.when(is_hot, F.lit(hc_lat) + jy).otherwise(F.col("lat"))
             )
-        return d.withColumn("cell", make_cell_udf(cd)(F.col("lon"), F.col("lat")))
+        return d.withColumn("cell", _cell_expr(F.col("lon"), F.col("lat"), cd))
 
     def run_variant(skewed: bool) -> dict:
         points = build_points(skewed).cache()

@@ -6,34 +6,57 @@ import pytest
 from pyspark.sql import functions as F
 
 from kblock_spark.geo.tiling import cell_of
-from kblock_spark.io.manifest import CheckpointManifest, checkpointed_run
+from kblock_spark.io.manifest import (
+    MANIFEST_SCHEMA,
+    CheckpointManifest,
+    checkpointed_run,
+)
 from kblock_spark.ops.knn import knn_join
 
 
-def test_checkpoint_resume(spark, tmp_path):
-    out = str(tmp_path / "out")
-    man = CheckpointManifest(spark, str(tmp_path / "manifest"))
+def _manifest_schema(spark):
+    return spark.createDataFrame([], MANIFEST_SCHEMA).schema.simpleString()
+
+
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "uri"])
+def test_checkpoint_resume(spark, tmp_path, as_uri):
+    """Crash, resume, re-run — on a plain path and on a ``file://``
+    URI (the manifest check goes through the Hadoop FS API; an
+    os.path check never saw a URI manifest, so every run redid every
+    key). The output holds one row per key whatever state the
+    manifest was in when a run started: absent, partial, complete."""
+    base = tmp_path.as_uri() if as_uri else str(tmp_path)
+    out = f"{base}/out"
+    man = CheckpointManifest(spark, f"{base}/manifest")
     universe = spark.range(0, 100).select(
         (F.col("id") % 10).cast("string").alias("part_key"), F.col("id")
     )
 
-    calls = []
-
     def build(df):
-        calls.append(1)
         return df.groupBy("part_key").agg(F.sum("id").alias("total"))
 
-    # simulate crash: first run processes only 4 partitions
+    def no_duplicates(n_keys):
+        result = spark.read.parquet(out)
+        assert result.count() == result.distinct().count() == n_keys
+        m = man.entries()
+        assert m.count() == m.select("partition_key").distinct().count() == n_keys
+
+    # simulate crash: first run (absent manifest) processes 4 partitions
     n1 = checkpointed_run(spark, universe, "part_key", build, out, man, max_keys=4)
     assert n1 == 4
-    # restart: processes the remaining 6, skips completed
+    no_duplicates(4)
+    # restart (partial manifest): processes the remaining 6
     n2 = checkpointed_run(spark, universe, "part_key", build, out, man)
     assert n2 == 6
-    # idempotent third run: nothing pending
+    no_duplicates(10)
+    assert spark.read.parquet(f"{base}/manifest").schema.simpleString() == (
+        _manifest_schema(spark)
+    )
+    # idempotent third run (complete manifest): nothing pending
     n3 = checkpointed_run(spark, universe, "part_key", build, out, man)
     assert n3 == 0
+    no_duplicates(10)
     result = spark.read.parquet(out)
-    assert result.count() == 10  # no duplicates from the resume
     clean = {
         (r["part_key"], r["total"])
         for r in universe.groupBy("part_key").agg(F.sum("id").alias("total")).collect()
@@ -41,9 +64,29 @@ def test_checkpoint_resume(spark, tmp_path):
     got = {(r["part_key"], r["total"]) for r in result.collect()}
     assert got == clean
     # lineage/metrics recorded per partition
-    m = man.entries()
-    assert m.count() == 10
-    assert m.where(F.col("rows") != 1).count() == 0
+    assert man.entries().where(F.col("rows") != 1).count() == 0
+
+
+def test_manifest_record_keeps_schema_dtypes(spark, tmp_path):
+    """``record`` builds its frame from pandas: ``rows`` and
+    ``wall_ms`` stay long (a value past 2^31 survives) and ``attempt``
+    stays int, exactly MANIFEST_SCHEMA."""
+    path = str(tmp_path / "manifest")
+    man = CheckpointManifest(spark, path)
+    assert not man._exists()
+    man.record([
+        {"partition_key": 7, "rows": 2**40, "wall_ms": 5, "attempt": 3},
+        {"partition_key": "b", "status": "failed", "input_fingerprint": "f"},
+    ])
+    m = spark.read.parquet(path)
+    assert m.schema.simpleString() == _manifest_schema(spark)
+    got = sorted(tuple(r) for r in m.collect())
+    assert got == [
+        ("7", "done", 2**40, 5, 3, "", ""),
+        ("b", "failed", 0, 0, 1, "f", ""),
+    ]
+    # only 'done' keys are completed
+    assert [r[0] for r in man.completed().collect()] == ["7"]
 
 
 def test_resume_idempotent_after_lost_manifest(spark, tmp_path):

@@ -3,6 +3,8 @@ the Catalyst treatment the architecture relies on — filter/column
 pushdown into the parquet scan, broadcast joins for small dims,
 whole-stage codegen on relational paths (no Python UDFs there)."""
 
+import re
+
 import pytest
 
 from kblock_spark.queries import (
@@ -145,7 +147,8 @@ def test_q24_group_id_broadcasts_back(spark):
     assert "Window" in plan
 
 
-def test_pip_join_broadcasts_polygons(spark):
+def _pip_2x2(spark):
+    """(blocks, PIP join) of a 2×2 synthetic city with 200 pages."""
     from kblock_spark.io.synth import synth_admin, synth_streets, synth_pages_spark
     from kblock_spark.kernels.blocks import delineate_blocks
     from kblock_spark.kernels.extract import geocoded_points
@@ -155,9 +158,34 @@ def test_pip_join_broadcasts_polygons(spark):
     streets = spark.createDataFrame(synth_streets(2, 2, 2))
     blocks = delineate_blocks(admin, streets)
     pts = geocoded_points(synth_pages_spark(spark, 200))
-    joined = assign_points_to_polygons(pts, blocks, ["url", "lon", "lat"])
+    return blocks, assign_points_to_polygons(pts, blocks, ["url", "lon", "lat"])
+
+
+def _arrow_eval_udfs(plan: str) -> list[str]:
+    """Names of the scalar pandas UDFs the plan's ArrowEvalPython
+    nodes run, one entry per node."""
+    return re.findall(r"ArrowEvalPython \[(\w+)\(", plan)
+
+
+def test_pip_join_broadcasts_polygons(spark):
+    _, joined = _pip_2x2(spark)
     plan = _plan(joined)
     assert "BroadcastHashJoin" in plan  # polygon side broadcast
+
+
+def test_cell_ids_start_no_python_runner(spark):
+    """Integer cell ids are Catalyst expressions: the only Python left
+    in the PIP join is the polygon-cover UDF and the refine kernel,
+    and delineation runs Python only in its cogroup kernel. A pandas
+    cell UDF here put two ArrowEvalPython runners (the optimizer also
+    copies it into the join key's null check) in the probe stage."""
+    blocks, joined = _pip_2x2(spark)
+    plan = _plan(joined)
+    assert _arrow_eval_udfs(plan) == ["covering"], plan
+    assert "MapInPandas refine(" in plan
+    plan = _plan(blocks)
+    assert "ArrowEvalPython" not in plan, plan
+    assert "FlatMapCoGroupsInPandas" in plan
 
 
 def test_pip_salted_shuffle_path_parity(spark):

@@ -3,16 +3,21 @@
 - append_snapshots_split must be commit-for-commit equivalent to N
   separate append_snapshot calls (chain shape, manifests, visible
   rows, per-snapshot deltas).
-- The Catalyst cell expressions introduced in ops/population.py must
-  be bit-identical to the numpy tiling they replaced (cell_of /
-  cells_covering_bbox), including on negative coordinates and
-  cell-boundary-adjacent values.
+- The Catalyst cell expressions in geo/tiling.py must be
+  bit-identical to their numpy twins (cell_of / cells_covering_bbox),
+  including on negative coordinates and cell-boundary-adjacent
+  values.
 """
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from kblock_spark.geo.tiling import cell_of, cells_covering_bbox
+from kblock_spark.geo.tiling import (
+    _box_cells_expr,
+    _cell_expr,
+    cell_of,
+    cells_covering_bbox,
+)
 from kblock_spark.io.tableformat import (
     append_snapshot,
     append_snapshots_split,
@@ -31,7 +36,6 @@ def snapshot_chain(path):
         out.append(sid)
         sid = read_manifest(path, sid).get("parent_id")
     return list(reversed(out))
-from kblock_spark.ops.population import _box_cells_expr, _cell_expr
 
 
 def _docs(spark, n=60):

@@ -8,8 +8,9 @@ import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from kblock_spark.geo.tiling import cell_of
 from kblock_spark.io.synth import _make_pages_pdf
-from kblock_spark.kernels.extract import make_cell_udf, with_geocode
+from kblock_spark.kernels.extract import with_geocode
 from kblock_spark.streaming import drain, read_pages_stream, stream_tile_rollup
 
 WINDOW = "1 minute"
@@ -17,8 +18,14 @@ WATERMARK = "2 minutes"
 
 
 def _batch_rollup(spark, pages_df):
+    """The expected rollup. Its cells come from the numpy tiling
+    (``cell_of``), joined back on the exact coordinates, so the
+    stream's Catalyst cell expression is checked against an
+    independent implementation."""
     pts = with_geocode(pages_df).where(F.col("lat").isNotNull())
-    pts = pts.withColumn("cell", make_cell_udf(0.003)(F.col("lon"), F.col("lat")))
+    xy = pts.select("lon", "lat").distinct().toPandas()
+    xy["cell"] = cell_of(xy["lon"].to_numpy(), xy["lat"].to_numpy(), 0.003)
+    pts = pts.join(spark.createDataFrame(xy), ["lon", "lat"])
     return (
         pts.groupBy(F.window("warc_ts", WINDOW).alias("w"), "cell")
         .agg(
